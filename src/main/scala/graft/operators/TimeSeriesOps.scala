@@ -36,12 +36,24 @@ object TimeSeriesOps {
     df.groupBy(g +: keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Dense grid: timeline × the (small, broadcast) distinct key set, left
-    * joined with the sparse per-bucket data — reference
-    * `align_time_series`'s reindex-onto-timeline (`pre_processing.py:208-241`). */
+  /** Dense grid: timeline × the distinct key set, left joined with the
+    * sparse per-bucket data — reference `align_time_series`'s
+    * reindex-onto-timeline (`pre_processing.py:208-241`). Output columns:
+    * the grid's, then the key set's, then the data's non-join columns.
+    *
+    * Partitioning: the key set streams and the grid (one row per step,
+    * bounded by its scalar min/max aggregate) is broadcast, so the output
+    * keeps the key set's partitioning — for a `distinct()` key set, hash
+    * partitioning on the keys. Per-key windows downstream then run one
+    * task per key partition. Streaming the grid instead would leave the
+    * output in one partition (an `explode` over a global aggregate), which
+    * satisfies every per-key window's clustering and runs all series in a
+    * single task. */
   def alignToGrid(grid: DataFrame, keysDf: DataFrame, data: DataFrame,
                   joinCols: Seq[String]): DataFrame =
-    grid.crossJoin(broadcast(keysDf)).join(data, joinCols, "left")
+    keysDf.crossJoin(broadcast(grid))
+      .select((grid.columns ++ keysDf.columns).map(c => col(s"`$c`")): _*)
+      .join(data, joinCols, "left")
 
   /** Forward-fill upsample (reference `resample('1h').ffill()`,
     * `pre_processing.py:208-225`): most recent non-null at or before each

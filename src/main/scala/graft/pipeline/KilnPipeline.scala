@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.aggregate.PivotFirst
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{JoinOps, TimeSeriesOps, WindowOps}
@@ -10,10 +11,12 @@ import graft.operators.{JoinOps, TimeSeriesOps, WindowOps}
   *
   * Where the reference materializes each stage eagerly (del + gc between
   * stages, thread pools inside, pickle spills), this builds a single
-  * expression tree: Catalyst collapses stages 2-8 into a handful of
-  * shuffle-free window passes over (zone)-partitioned sorts, the label join
-  * is one broadcast nested loop against the tiny event table, and a single
-  * action materializes everything (SURVEY §3.1).
+  * expression tree: the window passes of stages 2-8 share one hash
+  * partitioning on zone, taken from the aligned frame's key set
+  * ([[TimeSeriesOps.alignToGrid]]), and one (zone, ts) sort, so they
+  * exchange no rows between them and run one task per zone partition;
+  * the label join is one broadcast nested loop against the tiny event
+  * table, and a single action materializes everything (SURVEY §3.1).
   *
   * Data stays LONG (ts, zone, temp) throughout the feature stages — the
   * scale-critical choice (SURVEY §7.4-1): all windows partition by zone, so
@@ -125,12 +128,41 @@ object KilnPipeline {
 
   /** Final reshape: pivot the reduced per-zone hourly frame wide
     * (reference's aligned matrix, `pre_processing.py:1941`), with explicit
-    * zone values to skip the pivot-discovery pass. */
+    * zone values to skip the pivot-discovery pass. Columns and values are
+    * those of one `pivot("zone", zones).agg(first(c) ...)` over all of
+    * `valueCols`: `ts`, then `<zone>_<col>` for each zone and value column
+    * (a bare `<zone>` when there is one value column).
+    *
+    * Columns whose type Spark's `PivotFirst` supports (numeric, boolean,
+    * decimal) are pivoted apart from the rest. One other column in the
+    * same pivot call (here the string `risk_level`) makes the analyzer drop
+    * its two-phase `PivotFirst` rewrite for the whole call and evaluate
+    * zones × columns `first(if (zone <=> k) c else null)` aggregates on
+    * every row, in a non-codegen `SortAggregate` (a string in the
+    * aggregation buffer rules out the hash aggregate). Pivoted alone, the
+    * capable columns take the two-phase hash-aggregate path. The rest
+    * pivot `collect_list`, whose object buffer runs in
+    * `ObjectHashAggregate`; its first element is the first non-null value,
+    * which is what the fallback's null-skipping `first` returns. The two
+    * halves join on `ts`. */
   def toWide(labeled: DataFrame, zones: Seq[Int], valueCols: Seq[String]): DataFrame = {
-    val aggs = valueCols.map(c => first(col(c)).as(c))
-    labeled.groupBy("ts")
-      .pivot("zone", zones.map(_.toString))
-      .agg(aggs.head, aggs.tail: _*)
+    val values = zones.map(_.toString)
+    val (capable, other) =
+      valueCols.partition(c => PivotFirst.supportsDataType(labeled.schema(c).dataType))
+    val halves = Seq(
+      capable -> ((c: Column) => first(c)),
+      other -> ((c: Column) => get(collect_list(c), lit(0))))
+      .filter(_._1.nonEmpty).map { case (cols, agg) =>
+        val aggs = cols.map(c => agg(col(c)).as(c))
+        cols -> labeled.groupBy("ts").pivot("zone", values).agg(aggs.head, aggs.tail: _*)
+      }
+    // a pivot of one column names its outputs by the bare zone
+    val cell = halves.flatMap { case (cols, p) =>
+      cols.map(c => c -> ((z: String) => p(if (cols.size == 1) s"`$z`" else s"`${z}_$c`")))
+    }.toMap
+    halves.map(_._2).reduce(_.join(_, "ts")).select(col("ts") +:
+      (for (z <- values; c <- valueCols)
+        yield cell(c)(z).as(if (valueCols.size == 1) z else s"${z}_$c")): _*)
   }
 
   /** The whole pipeline, end to end, as one plan. */

@@ -109,54 +109,28 @@ class GlobalWindowLintSpec extends SparkSpec {
     * GROUPED aggregate is NOT a bound — a groupBy over document ids is
     * corpus-sized — so those must carry a named allowlist entry (round 7's
     * any-Aggregate escape let them pass silently; q209 rode it). */
-  /** The shared bound for every query built on TimeSeriesQ.aligned /
-    * WindowQ.series: `TimeSeriesOps.alignToGrid` crossjoins the hourly
-    * timeline (scalar-aggregate-bounded) with the broadcast DISTINCT
-    * series-key set — event_type, an enum-sized domain vocabulary whose
-    * cardinality is fixed by the schema, not by data volume. The grouped
-    * distinct LOOKS unbounded to the lint (same plan shape as a groupBy
-    * over doc ids), hence named entries rather than a structural escape. */
+  /** The shared bound for the as-of queries that build the dense grid by
+    * hand: they crossjoin the hourly timeline (scalar-aggregate-bounded)
+    * with the broadcast DISTINCT series-key set — event_type, an
+    * enum-sized domain vocabulary whose cardinality is fixed by the
+    * schema, not by data volume. The grouped distinct LOOKS unbounded to
+    * the lint (same plan shape as a groupBy over doc ids), hence named
+    * entries rather than a structural escape. `TimeSeriesOps.alignToGrid`
+    * broadcasts the timeline instead, which passes the structural escape,
+    * so the queries built on TimeSeriesQ.aligned / WindowQ.series need no
+    * entry. */
   private val seriesGridBound =
     "broadcast side is the distinct series-key set (event_type: enum-sized " +
-      "domain vocabulary) crossjoined onto the hourly grid (alignToGrid) — " +
+      "domain vocabulary) crossjoined onto the hourly grid — " +
       "keys × hours, never event rows"
 
   private val seriesGridQueries = Seq(
-    "q22_resample_ffill", "q23_resample_interpolate", "q24_asof_join",
-    "q24b_asof_native", "q163_asof_tolerance", "q25_nearest_reindex",
-    "q30_lag_features", "q31_rolling_mean_std", "q32_rolling_minmax",
-    "q33_diff_gradient", "q34_pct_change", "q35_cooling_trend",
-    "q36_anomaly_zscore", "q37_drift", "q38_zscore_spread", "q40_savgol",
-    "q210_savgol_interp", "q44_impute", "q70_early_warning",
-    "q97_rolling_median", "q107_subseq_search", "q108_sax_words",
-    "q109_sax_motifs", "q214_ewma", "q215_holt_winters",
-    "q225_forecast_backtest", "q286_kalman_level",
-    // conformalNaive's own joins are equi (broadcast q_hat); the two
-    // flagged BNLJs are the series() fixture's alignToGrid crossjoins,
-    // duplicated across the calibrate and coverage branches
-    "q234_conformal_coverage",
-    // theta backtest reads the series() grid twice (SES fold + slope
-    // moments), so the fixture's alignToGrid crossjoin appears in both
-    // branches; the finance indicators each read it once
-    "q307_theta_backtest",
-    "q312_max_drawdown", "q313_rsi", "q314_macd", "q341_garch_vol",
-    // the variance-targeting fit reads the series() grid twice (moment
-    // windows + the collected filter fold), so the fixture's alignToGrid
-    // crossjoin appears in both branches
-    "q346_garch_fit")
+    "q24_asof_join", "q24b_asof_native", "q163_asof_tolerance")
 
   private val allowBnlj: Map[String, String] =
     seriesGridQueries.map(_ -> seriesGridBound).toMap ++ Map(
     "q168_ab_test" ->
       "broadcast side is the per-arm conversion aggregate: exactly 2 rows (arms a/b)",
-    "q209_knn_impute" -> ("broadcast side is the missing-row slice of the " +
-      "wide HOURLY matrix (a pivot aggregate over the time grid: <= #hours " +
-      "rows by construction, never events; ImputeOps scaladoc documents the " +
-      "LSH prefilter past grid scale)"),
-    "q213_knn_impute_lsh" -> ("the candidate join itself is a pure equi-join " +
-      "on the LSH bucket; the flagged BNLJs are the gate matrix's " +
-      "alignToGrid key-set crossjoins (enum-sized event_type x hourly " +
-      "grid), replicated across the missing/complete/stats subtrees"),
     "q58_ann_topk" -> "broadcast side is the single query vector (unique-id filter)",
     "q63_ann_multiprobe" -> "single query vector broadcast",
     "q64_ann_ivf" -> "single query vector broadcast",
@@ -182,12 +156,7 @@ class GlobalWindowLintSpec extends SparkSpec {
       "pair-explode membership join — never data volume"),
     "q319_hurst_rs" -> ("broadcast side is the LITERAL block-size table " +
       "(|blockSizes| = 4 rows by construction) crossjoined onto the " +
-      "hourly collapse"),
-    "q324_dtw_profiles" -> ("the flagged joins are (a) the series() " +
-      "fixture's alignToGrid key-set crossjoin (enum-sized event_type x " +
-      "hourly grid), duplicated across both sides of (b) the pair " +
-      "crossjoin of the per-series collected-grid table — series-key-" +
-      "domain-sized, one row per series by construction")
+      "hourly collapse")
     // q342_dbscan's exact all-pairs BNLJ (SimilarityOps.exactCosinePairs,
     // the deliberate oracle-parity quadratic — scale swap is the LSH
     // q59/q213 machinery, scaladoc'd) sits BELOW dbscan's persist(), so

@@ -1,7 +1,13 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.pipeline.KilnPipeline
 
 /** Semantic-parity replay on a kiln-shaped deterministic fixture
@@ -72,6 +78,50 @@ class KilnPipelineSpec extends SparkSpec {
     val calmAvg = out.filter(col("zone") =!= 3).agg(avg("risk_score"))
       .collect().head.getDouble(0)
     assert(evAvg > calmAvg, s"event risk $evAvg should exceed calm $calmAvg")
+  }
+
+  /** The plan Spark runs with adaptive execution off, as the benchmarks run it. */
+  private def staticPlan(df: DataFrame): SparkPlan = {
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try df.queryExecution.executedPlan finally spark.conf.set(key, was)
+  }
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(nodes)
+
+  test("toWide equals one pivot call over all value columns") {
+    val labeled = out.withColumn("risk_word", lower(col("risk_level")))
+    val cases = Seq(
+      Seq("temp", "risk_level", "anomaly", "days_to_critical", "risk_score"),
+      Seq("risk_level", "temp", "risk_word"),  // the PivotFirst half has one column
+      Seq("temp", "risk_level"),              // both halves have one column
+      Seq("risk_score"),
+      Seq("risk_level"),
+      Seq("risk_word", "risk_level"))
+    cases.foreach { valueCols =>
+      val aggs = valueCols.map(c => first(col(c)).as(c))
+      val want = labeled.groupBy("ts").pivot("zone", Seq("3", "4", "5"))
+        .agg(aggs.head, aggs.tail: _*)
+      val got = KilnPipeline.toWide(labeled, Seq(3, 4, 5), valueCols)
+      assert(got.schema == want.schema, valueCols)
+      assert(got.orderBy("ts").collect().toSeq == want.orderBy("ts").collect().toSeq, valueCols)
+      val plan = staticPlan(got)
+      val text = plan.toString
+      if (valueCols.exists(c => labeled.schema(c).dataType != StringType))
+        assert(text.contains("pivotfirst"), valueCols)
+      assert(!text.contains("first(if ((zone"), valueCols)
+      assert(!nodes(plan).exists(_.isInstanceOf[SortAggregateExec]), valueCols)
+    }
+  }
+
+  test("zone windows read zone-partitioned input, never a single partition") {
+    // a plan of its own: the cached `out` would stand in for an identical one
+    val plan = staticPlan(KilnPipeline.process(readings, events.filter(col("event_id").isNotNull)))
+    val windows = nodes(plan).collect { case w: WindowExec if w.partitionSpec.nonEmpty => w }
+    assert(windows.nonEmpty)
+    val single = windows.filter(_.child.outputPartitioning == SinglePartition)
+    assert(single.isEmpty, s"${single.size} of ${windows.size} windows read a single partition")
   }
 
   test("wide pivot produces per-zone columns on the reduced frame") {
