@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare (`tools/check.py`), plus
+  * failed.tsv — one (query, error) line per query that threw, so a
+  * failure is recorded next to the results instead of only on stderr. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,15 +21,23 @@ object Verify {
     // driver leaves it unset and dumps everything (same contract as Bench)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = only.fold(SparkEntry.queries)(f => SparkEntry.queries.filter(kv => f(kv._1)))
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      val err =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(s"${e.getClass.getName}: ${e.getMessage}")
+        }
       // release per-query persisted intermediates (see graft.Bench)
       spark.catalog.clearCache()
+      err.map(name -> _)
     }
+    Files.writeString(Paths.get(s"$outDir/failed.tsv"),
+      failed.sorted.map { case (n, e) => s"$n\t${e.replaceAll("\\s+", " ")}\n" }
+        .mkString("query\terror\n", "", ""))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -3,7 +3,10 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Superstep materialization policy for the iterative (Pregel-shaped)
-  * operators — PageRank, BFS, star-contraction connected components.
+  * operators: the fixed-horizon [[GraphOps]] loops (PageRank, HITS, label
+  * propagation, the Louvain sweep) run through [[iterate]]; the
+  * data-dependent loops (BFS, k-core, the BPE trainer, star-contraction
+  * connected components) call [[step]] themselves.
   *
   * Fault-tolerance contract: `localCheckpoint` (the default) truncates
   * lineage by caching blocks ON THE EXECUTORS — O(1) analysis cost per
@@ -39,4 +42,18 @@ object Ckpt {
       df.sparkSession.sparkContext.getCheckpointDir.isDefined
     if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
   }
+
+  /** The fixed-horizon superstep loop: `init` is checkpointed lazily,
+    * then each round `i` of `rounds` replaces the state `s` with
+    * `step(f(s, i), i, reliableEvery, eager = false)`. Each generation's
+    * blocks are written by its first consumer (the next round's broadcast
+    * build or shuffle, or the caller's final action), so no round runs a
+    * checkpoint-only job; nothing is unpersisted, so the deferral is safe.
+    * `rounds` is also the checkpoint index: a loop that continues an
+    * earlier one passes `offset + 1 to offset + n`. */
+  def iterate(init: DataFrame, rounds: Range, reliableEvery: Int)
+             (f: (DataFrame, Int) => DataFrame): DataFrame =
+    rounds.foldLeft(init.localCheckpoint(eager = false)) { (s, i) =>
+      step(f(s, i), i, reliableEvery, eager = false)
+    }
 }

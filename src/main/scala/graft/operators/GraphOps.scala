@@ -12,14 +12,32 @@ import org.apache.spark.sql.functions._
   * framework). Companion to the star-contraction connected components in
   * [[DedupOps]].
   *
-  * Each superstep MATERIALIZES the node-sized rank vector
-  * (`localCheckpoint`) and reuses the persisted normalized edge table —
-  * the Pregel execution model. A pure lazy plan is NOT an option here:
-  * the rank vector feeds three consumers per step (dangling mass,
-  * contribution join, next vector), so unmaterialized lineage grows
-  * ~3^iters logical nodes and Catalyst analysis time explodes long
-  * before execution would. */
+  * Each superstep checkpoints the node-sized state LAZILY (the
+  * fixed-horizon operators through [[Ckpt.iterate]], the data-dependent
+  * loops through [[Ckpt.step]] with `eager = false`): the blocks are
+  * written by the state's first consumer, and the persisted normalized
+  * edge table is reused — the Pregel execution model. A pure lazy plan is
+  * NOT an option here: the rank vector feeds three consumers per step
+  * (dangling mass, contribution join, next vector), so unmaterialized
+  * lineage grows ~3^iters logical nodes and Catalyst analysis time
+  * explodes long before execution would.
+  *
+  * One broadcast regime for every operator: node-sized state whose node
+  * count is at most [[NodeLimit]] enters the edge joins broadcast;
+  * above it every node-keyed join shuffles (the web-graph regime). */
 object GraphOps {
+
+  /** Broadcast-regime bound: node-sized state of at most this many nodes
+    * rides the edge joins broadcast. */
+  val NodeLimit: Long = 1000000L
+
+  /** Super-edge bound of [[louvainMultiLevel]]'s driver-side level-2
+    * sweep ([[seqLocalMoving]]); above it level 2 runs distributed. */
+  private val SeqEdgeLimit: Long = 1000000L
+
+  /** `broadcast(df)` in the broadcast regime, `df` otherwise. */
+  private def bc(on: Boolean)(df: DataFrame): DataFrame =
+    if (on) broadcast(df) else df
 
   /** Weighted PageRank by `iters` unrolled power-iteration steps:
     * r ← (1−d)/N + d·(Pᵀr + dangling/N), where P is the out-weight-
@@ -33,12 +51,12 @@ object GraphOps {
     * rank vector, and one dst-keyed sum. Parallel edges are pre-merged
     * so the transition weights are well-defined.
     *
-    * Two physical regimes, switched on |nodes| vs `broadcastNodeLimit`:
-    *  - FAST PATH (|nodes| ≤ limit): the rank vector lives in ONE
+    * Two physical regimes, switched on |nodes| vs [[NodeLimit]]:
+    *  - FAST PATH (|nodes| ≤ NodeLimit): the rank vector lives in ONE
     *    partition and enters every join broadcast — the only shuffle per
     *    superstep is the dst-keyed contribution sum. Right for the
     *    node-sized-state-fits-in-an-executor regime.
-    *  - SCALE PATH (|nodes| > limit, the web-graph regime): the vector
+    *  - SCALE PATH (|nodes| > NodeLimit, the web-graph regime): the vector
     *    stays hash-partitioned by node and the joins shuffle — no
     *    per-iteration broadcast of a multi-GB vector, no one-partition
     *    checkpoint bottleneck. Each superstep's output is already
@@ -46,17 +64,18 @@ object GraphOps {
     *    so the checkpoint preserves it and the next step's node-keyed
     *    joins reuse the partitioning without an extra exchange.
     *
-    * Regime selection: `broadcastRank = Some(b)` is a CALLER HINT that
-    * skips the probe job entirely — the caller usually knows whether the
-    * node universe is bounded (a vocabulary-keyed graph) or web-scale.
-    * With `None` (default) one node-count aggregate decides, and its
-    * collected value doubles as the literal N everywhere, so the rank
-    * state drops the __N carry column and rank0 loses its scalar
-    * crossjoin — the probe is folded into work the iteration needed
+    * Regime selection: `broadcastRank = Some(true)` is a CALLER HINT that
+    * skips the probe job entirely — the caller knows the node universe is
+    * bounded (a vocabulary-keyed graph), and the single fast-path
+    * partition computes N inside the task that builds the vector. With
+    * `None` (default) or `Some(false)` one node-count aggregate runs, and
+    * its collected value doubles as the literal N everywhere; `None`
+    * picks the regime from it (`N ≤ NodeLimit`), `Some(false)` forces the
+    * scale path. The probe is folded into work the iteration needed
     * anyway, never a count-only extra job.
     *
-    * Fault tolerance: `reliableEvery` — see [[Ckpt.step]] (default 0 =
-    * every superstep localCheckpoints; set k > 0 plus a
+    * Fault tolerance: `reliableEvery` — see [[Ckpt.iterate]] (default 0 =
+    * every superstep localCheckpoints lazily; set k > 0 plus a
     * `setCheckpointDir` for durable snapshots every k supersteps on
     * long cluster runs).
     *
@@ -64,7 +83,6 @@ object GraphOps {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                weightCol: String, damping: Double, iters: Int,
                scoreOut: Column => Column,
-               broadcastNodeLimit: Long = 1000000L,
                broadcastRank: Option[Boolean] = None,
                reliableEvery: Int = 0): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1,
@@ -84,7 +102,6 @@ object GraphOps {
       .persist()
     val nodeTab = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-    val nTab = nodeTab.agg(count(lit(1)).cast("double").as("__N"))
     // the dangling flag (node has NO out-edge) is a STATIC property of the
     // graph: attach it to the state ONCE and carry it through every
     // superstep, so the per-superstep dangling mass is a filter+sum over
@@ -93,20 +110,19 @@ object GraphOps {
     // iterative job-count floor was the measured cost, q233 scaling 0.48)
     val srcSet = norm.select(col("src").as("node")).distinct()
       .withColumn("__has", lit(1))
-    def flagged(bc: Boolean): DataFrame =
-      nodeTab.join(if (bc) broadcast(srcSet) else srcSet, Seq("node"), "left")
+    def flagged(on: Boolean): DataFrame =
+      nodeTab.join(bc(on)(srcSet), Seq("node"), "left")
         .select(col("node"), col("__has").isNull.as("__dang"))
     // hinted broadcast: zero probe jobs AND zero aggregate branch — the
     // single fast-path partition computes N inside the same task that
-    // builds the vector. Hinted scale: N stays in-plan via the 1-row
-    // crossjoin. Auto: ONE aggregate job whose value serves both the
-    // regime decision and the literal N.
+    // builds the vector. Otherwise ONE aggregate job whose value serves
+    // both the regime decision and the literal N.
     val (bcastRank, rank0) = broadcastRank match {
       case Some(true) =>
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.catalyst.encoders.RowEncoder
         import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructType}
-        val nt = flagged(bc = true).coalesce(1)
+        val nt = flagged(on = true).coalesce(1)
         val schema = StructType(Seq(
           StructField("node", nodeTab.schema("node").dataType),
           StructField("r", DoubleType, nullable = false),
@@ -117,32 +133,18 @@ object GraphOps {
           val n = rows.length.toDouble
           rows.iterator.map(row => Row(row.get(0), 1.0 / n, n, row.getBoolean(1)))
         }(RowEncoder.encoderFor(schema)))
-      case Some(false) =>
-        (false, flagged(bc = false).crossJoin(nTab)
-          .select(col("node"), (lit(1.0) / col("__N")).as("r"), col("__N"),
-            col("__dang")))
-      case None =>
-        val n = nTab.first().getDouble(0)
-        val bc = n <= broadcastNodeLimit.toDouble
-        (bc, flagged(bc)
+      case hint =>
+        val n = nodeTab.agg(count(lit(1)).cast("double")).first().getDouble(0)
+        val on = hint.getOrElse(n <= NodeLimit)
+        (on, flagged(on)
           .select(col("node"), lit(1.0 / n).as("r"), lit(n).as("__N"),
             col("__dang")))
     }
-    // LAZY init checkpoint (r13): superstep 1's rank broadcast build /
-    // first shuffle materializes it — same deferral as the per-step
-    // Ckpt.step(eager=false) below
-    var rank: DataFrame = (if (bcastRank) rank0.coalesce(1) else rank0)
-      .localCheckpoint(eager = false)
-    for (i <- 1 to iters) {
-      val nxt = pageRankStep(norm, rank, damping, bcastRank)
-      // one lazily-checkpointed superstep; O(1) lineage. The checkpoint
-      // materializes inside the NEXT superstep's first consumer job (the
-      // rank broadcast build / the final consume) — the eager per-step
-      // checkpoint job is gone (guide §2 scheduling; the BPE
-      // Ckpt.step(eager=false) pattern). Fast path re-collapses to one
-      // partition; scale path keeps the join's node partitioning.
-      rank = Ckpt.step(if (bcastRank) nxt.coalesce(1) else nxt,
-        i, reliableEvery, eager = false)
+    // the fast path keeps the vector in ONE partition; the scale path
+    // keeps the node-keyed join's partitioning
+    def shaped(df: DataFrame): DataFrame = if (bcastRank) df.coalesce(1) else df
+    val rank = Ckpt.iterate(shaped(rank0), 1 to iters, reliableEvery) {
+      (r, _) => shaped(pageRankStep(norm, r, damping, bcastRank))
     }
     rank.select(col("node"), scoreOut(col("r")).as("rank"))
   }
@@ -151,7 +153,7 @@ object GraphOps {
     * pin BOTH plan shapes: `bcastRank=true` broadcasts the node-sized
     * vector into the edge join and computes the dangling mass as a
     * frame-local window over the ONE-partition state (bounded by the
-    * regime: |nodes| ≤ broadcastNodeLimit — no separate aggregate job, no
+    * regime: |nodes| ≤ NodeLimit — no separate aggregate job, no
     * 1-row crossjoin build per superstep); `bcastRank=false` leaves every
     * node-keyed join to shuffle and the dangling mass as the scalar
     * aggregate + 1-row crossjoin — no broadcast of the rank vector
@@ -163,9 +165,9 @@ object GraphOps {
     * the filter/`when` both reduce the state's rows left-to-right. */
   private[graft] def pageRankStep(norm: DataFrame,
       rank: DataFrame, damping: Double, bcastRank: Boolean): DataFrame = {
-    def h(df: DataFrame): DataFrame = if (bcastRank) broadcast(df) else df
     val contrib = norm
-      .join(h(rank.select(col("node"), col("r"))), col("src") === col("node"))
+      .join(bc(bcastRank)(rank.select(col("node"), col("r"))),
+        col("src") === col("node"))
       .groupBy(col("dst").as("node"))
       .agg(sum(col("r") * col("p")).as("__cin"))
     val withDm =
@@ -180,7 +182,7 @@ object GraphOps {
           .crossJoin(dangling)
       }
     withDm
-      .join(h(contrib), Seq("node"), "left")
+      .join(bc(bcastRank)(contrib), Seq("node"), "left")
       .select(col("node"),
         (lit(1.0 - damping) / col("__N") + lit(damping) *
           (coalesce(col("__cin"), lit(0.0)) + col("__dm") / col("__N")))
@@ -196,11 +198,12 @@ object GraphOps {
     * Pregel discipline throughout (the [[pageRank]] lesson): the edge
     * set is persisted once; per superstep the frontier expands through
     * ONE equi-join, new nodes are a LEFT ANTI against the visited set,
-    * and both frames are `localCheckpoint`ed so lineage stays O(1)
-    * instead of k^hops. The per-step `isEmpty` probe is one scheduling
-    * job — the honest Pregel cost — and stops dead subtrees early.
-    * State is node-sized (node, hop); the frontier join shuffles on the
-    * node key, never broadcasting anything unbounded.
+    * and both frames go through a lazy [[Ckpt.step]] so lineage stays
+    * O(1) instead of k^hops. The per-hop `count()` of the new frontier is
+    * the hop's one scheduler job — it materializes the frontier's
+    * checkpoint (and the previous hop's visited state) and its zero stops
+    * dead subtrees early. State is node-sized (node, hop); the frontier
+    * join shuffles on the node key, never broadcasting anything unbounded.
     *
     * Fault tolerance: `reliableEvery` — see [[Ckpt.step]] (default 0 =
     * localCheckpoint every superstep; k > 0 plus a `setCheckpointDir`
@@ -277,12 +280,7 @@ object GraphOps {
                     maxDegree: Option[Long] = None): DataFrame = {
     // canonical undirected edge set: u < v, loops dropped. Persisted —
     // degrees, orientation and the closing join all re-read it.
-    val eRaw = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist()
+    val eRaw = canonEdges(edges, aCol, bCol).persist()
     // Optional hub cap — the 100 TB knob (the q322 Adamic-Adar
     // precedent): the degree-ordered orientation bounds wedge volume at
     // O(m^1.5) only when SOME corner of each triangle has modest degree;
@@ -378,18 +376,18 @@ object GraphOps {
     * pre-merged and persisted; each iteration is one src-keyed and one
     * dst-keyed edge⋈vector equi-join plus a scalar normalizer crossjoin
     * (1-row aggregate — AQE broadcasts it); vectors are node-sized and
-    * [[Ckpt.step]]-materialized per step (O(1) lineage, `reliableEvery`
-    * for durable snapshots). `broadcastVec = Some(true)` is the bounded-
-    * vocabulary caller hint (the q233 convention) — the vector enters
-    * the edge joins broadcast; `Some(false)`/auto keeps it
-    * hash-partitioned for web-scale graphs.
+    * lazily checkpointed per step by [[Ckpt.iterate]] (O(1) lineage,
+    * `reliableEvery` for durable snapshots). `broadcastVec = Some(true)`
+    * is the bounded-vocabulary caller hint (the q233 convention) — the
+    * vector enters the edge joins broadcast; `Some(false)` keeps it
+    * hash-partitioned for web-scale graphs; `None` probes |nodes| against
+    * [[NodeLimit]].
     *
     * Returns (node, hub, authority), each column summing to 1; nodes
     * with no out-edges (resp. in-edges) score 0 on that side. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            weightCol: String, iters: Int, scoreOut: Column => Column,
            broadcastVec: Option[Boolean] = None,
-           broadcastNodeLimit: Long = 1000000L,
            reliableEvery: Int = 0): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
     val e = edges
@@ -398,9 +396,7 @@ object GraphOps {
       .persist()
     val nodeTab = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct().persist()
-    val bcast = broadcastVec.getOrElse(
-      nodeTab.count() <= broadcastNodeLimit)
-    def h(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    val bcast = broadcastVec.getOrElse(nodeTab.count() <= NodeLimit)
     // normalizer: in the broadcast regime the vector is node-bounded and
     // about to be coalesced to ONE partition anyway, so the L1 total is a
     // frame-local window over that single partition — no per-iteration
@@ -412,36 +408,28 @@ object GraphOps {
     def l1norm(raw: DataFrame, c: String): DataFrame =
       if (bcast)
         raw.select(col("node"),
-          (col(c) / sum(c).over(Window.partitionBy())).as(c))
+          (col(c) / sum(c).over(Window.partitionBy())).as(c)).coalesce(1)
       else {
         val tot = raw.agg(sum(c).as("__tot"))
         raw.crossJoin(tot).select(col("node"), (col(c) / col("__tot")).as(c))
       }
     val n0 = nodeTab.crossJoin(nodeTab.agg(count(lit(1)).cast("double").as("__N")))
-    var auth: DataFrame = (if (bcast) n0.coalesce(1) else n0)
-      .select(col("node"), (lit(1.0) / col("__N")).as("a"))
-      .localCheckpoint()
-    var hub: DataFrame = auth.select(col("node"), col("a").as("h"))
-    for (i <- 1 to iters) {
-      // materialization discipline: only the FULL-iteration boundary
-      // (auth) checkpoints — hub stays a lazy 1-join/1-agg function of
-      // the checkpointed auth, so lineage depth is a constant 2 per
-      // round while the per-iteration job count halves. The last
-      // iteration checkpoints hub too: the final assembly reads both
-      // vectors, and an un-materialized hub would re-run its edge join
-      // a second time there (same total edge passes, half the jobs).
-      val hraw = e.join(h(auth), col("dst") === col("node"))
-        .groupBy(col("src").as("node")).agg(sum(col("w") * col("a")).as("h"))
-      val hn = { val n = l1norm(hraw, "h"); if (bcast) n.coalesce(1) else n }
+    // materialization discipline: only the FULL-iteration boundary (auth)
+    // is the loop state — hub stays a lazy 1-join/1-agg function of the
+    // checkpointed auth, so lineage depth is a constant 2 per round. The
+    // last iteration checkpoints hub too: the final assembly reads both
+    // vectors, and an un-materialized hub would re-run its edge join a
+    // second time there (same total edge passes, half the jobs).
+    var hub: DataFrame = null
+    val auth = Ckpt.iterate(
+      (if (bcast) n0.coalesce(1) else n0)
+        .select(col("node"), (lit(1.0) / col("__N")).as("a")),
+      1 to iters, reliableEvery) { (a, i) =>
+      val hn = l1norm(e.join(bc(bcast)(a), col("dst") === col("node"))
+        .groupBy(col("src").as("node")).agg(sum(col("w") * col("a")).as("h")), "h")
       hub = if (i == iters) Ckpt.step(hn, i, reliableEvery, eager = false) else hn
-      val araw = e.join(h(hub), col("src") === col("node"))
-        .groupBy(col("dst").as("node")).agg(sum(col("w") * col("h")).as("a"))
-      // lazy checkpoint (r13): the auth state materializes inside the
-      // next iteration's hub join / the final assembly — one fewer
-      // scheduler job per iteration
-      auth = Ckpt.step(
-        { val n = l1norm(araw, "a"); if (bcast) n.coalesce(1) else n },
-        i, reliableEvery, eager = false)
+      l1norm(e.join(bc(bcast)(hub), col("src") === col("node"))
+        .groupBy(col("dst").as("node")).agg(sum(col("w") * col("h")).as("a")), "a")
     }
     nodeTab
       .join(hub, Seq("node"), "left")
@@ -471,13 +459,8 @@ object GraphOps {
   def adamicAdar(edges: DataFrame, aCol: String, bCol: String,
                  maxDegree: Option[Long],
                  scoreOut: Column => Column): DataFrame = {
-    val canon = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist()
-    val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
+    val canon = canonEdges(edges, aCol, bCol).persist()
+    val sym = symmetric(canon)
     val deg = sym.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
     val centers = maxDegree.fold(deg)(cap => deg.filter(col("deg") <= cap))
@@ -510,45 +493,29 @@ object GraphOps {
     *
     * Superstep cost: one edge⋈label equi-join + one (node, label) count
     * + one per-node argmax window — all keyed on node ids, state is
-    * node-sized, [[Ckpt.step]]-materialized (the Pregel discipline).
+    * node-sized and lazily checkpointed per superstep by [[Ckpt.iterate]]
+    * (the Pregel discipline). The label state enters the edge join
+    * broadcast while |nodes| ≤ [[NodeLimit]] (the edge table is never
+    * shuffled); above it the join shuffles.
     * Returns (node, label) — nodes sharing a label are one community. */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
-                       iters: Int, reliableEvery: Int = 0,
-                       broadcastNodeLimit: Long = 1000000L): DataFrame = {
+                       iters: Int, reliableEvery: Int = 0): DataFrame = {
     require(iters >= 1 && iters <= 20, s"1 <= iters <= 20, got $iters")
-    val canon = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-    val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
-      .persist()
+    val sym = symmetric(canonEdges(edges, aCol, bCol)).persist()
     val nodes = sym.select(col("u").as("node")).distinct().persist()
-    // broadcast regime (the [[pageRank]] convention): a node-sized label
-    // state that fits an executor enters the edge join broadcast — the
-    // edge table is never shuffled; above the limit the join shuffles
-    val bcast = nodes.count() <= broadcastNodeLimit
-    def h(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    // LAZY init checkpoint (r13): superstep 1's label broadcast build
-    // materializes it — same deferral as the per-round step below
-    var labels = nodes.withColumn("label", col("node"))
-      .localCheckpoint(eager = false)
-    for (i <- 1 to iters) {
-      val counted = sym
-        .join(h(labels.select(col("node").as("v"), col("label").as("nl"))), "v")
+    val bcast = nodes.count() <= NodeLimit
+    val pick = Window.partitionBy("node").orderBy(col("c").desc, col("nl").asc)
+    Ckpt.iterate(nodes.withColumn("label", col("node")), 1 to iters,
+        reliableEvery) { (labels, _) =>
+      sym
+        .join(bc(bcast)(labels.select(col("node").as("v"),
+          col("label").as("nl"))), "v")
         .groupBy(col("u").as("node"), col("nl"))
         .agg(count(lit(1)).as("c"))
-      val pick = Window.partitionBy("node")
-        .orderBy(col("c").desc, col("nl").asc)
-      // lazy checkpoint (r13): materializes inside the next round's label
-      // broadcast build — one fewer scheduler job per superstep
-      labels = Ckpt.step(
-        counted.withColumn("__rk", row_number().over(pick))
-          .filter(col("__rk") === 1)
-          .select(col("node"), col("nl").as("label")),
-        i, reliableEvery, eager = false)
+        .withColumn("__rk", row_number().over(pick))
+        .filter(col("__rk") === 1)
+        .select(col("node"), col("nl").as("label"))
     }
-    labels
   }
 
   /** One-level Louvain modularity communities (Blondel, Guillaume,
@@ -579,8 +546,8 @@ object GraphOps {
     * union, and a per-node argmax window — all partitioned by node or
     * label, nothing corpus-global except the scalar edge-count m
     * (a scalar-aggregate crossjoin, no collected metadata). Labels are
-    * [[Ckpt.step]]-materialized per round (the Pregel discipline, with
-    * the `reliableEvery` durable-checkpoint contract).
+    * lazily checkpointed per round by [[Ckpt.iterate]] (the Pregel
+    * discipline, with the `reliableEvery` durable-checkpoint contract).
     *
     * Returns the `topK` communities by size:
     * (community, n_nodes, n_internal, sigma_tot, modularity) —
@@ -625,8 +592,7 @@ object GraphOps {
     * modularity_l2). */
   def louvainMultiLevel(edges: DataFrame, aCol: String, bCol: String,
                         rounds: Int, topK: Int, scoreOut: Column => Column,
-                        reliableEvery: Int = 0,
-                        seqLimit: Long = 1000000L): DataFrame = {
+                        reliableEvery: Int = 0): DataFrame = {
     require(rounds >= 1 && rounds <= 10, s"1 <= rounds <= 10, got $rounds")
     val spark = edges.sparkSession
     val canon = canonEdges(edges, aCol, bCol).persist()
@@ -635,14 +601,13 @@ object GraphOps {
     val l1 = l1u.persist()
     // node-sized label frames ride the edge-shaped joins broadcast in
     // the bounded regime (the sweep's probe decides once)
-    def hb(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     // both endpoint joins probe the SAME persisted (node, label) frame
     // via column equality (rename AFTER the first join) so the planner
     // reuses ONE broadcast exchange instead of building two (r13)
     val superE = canon
-      .join(hb(l1), col("u") === col("node"))
+      .join(bc(bcast)(l1), col("u") === col("node"))
       .select(col("u"), col("v"), col("label").as("la"))
-      .join(hb(l1), col("v") === col("node"))
+      .join(bc(bcast)(l1), col("v") === col("node"))
       .select(least(col("la"), col("label")).as("u"),
         greatest(col("la"), col("label")).as("v"))
       .groupBy("u", "v").agg(count(lit(1)).cast("double").as("w"))
@@ -654,7 +619,7 @@ object GraphOps {
     // (measured on a contracted path: three super-nodes cycle for every
     // round budget, zero net moves). The contracted graph is community-
     // sized — the entire point of the aggregation phase — so up to
-    // `seqLimit` super-edges it is collected and swept with Blondel's
+    // `SeqEdgeLimit` super-edges it is collected and swept with Blondel's
     // SEQUENTIAL local moving (ascending-id node order, dec6-rounded
     // gains, community-id tiebreak, move only on strict improvement →
     // every accepted move raises Q, monotone by construction). Beyond
@@ -662,7 +627,7 @@ object GraphOps {
     // guard; either way Q(l2) ≥ Q(l1) is a guarantee, not a hope.
     val nSuper = superE.count()
     val l2 =
-      if (nSuper <= seqLimit) {
+      if (nSuper <= SeqEdgeLimit) {
         val triples = superE.collect().map(r =>
           (r.get(0), r.get(1), r.getDouble(2)))
         val moved = seqLocalMoving(triples, rounds)
@@ -682,7 +647,7 @@ object GraphOps {
     // (its 1-partition createDataFrame lineage has no stats, so unhinted
     // the compose join plans as a full SortMergeJoin — r13b)
     val composed = l1.select(col("node"), col("label").as("__c1"))
-      .join(hb(l2.select(col("node").as("__c1"), col("label"))), "__c1")
+      .join(bc(bcast)(l2.select(col("node").as("__c1"), col("label"))), "__c1")
       .select(col("node"), col("label"))
       .localCheckpoint(eager = false)
     val (_, q1Row) = communitySummary(canon, l1, bcast)
@@ -832,6 +797,11 @@ object GraphOps {
       .filter(col("u") =!= col("v"))
       .distinct()
 
+  /** Both orientations of a canonical (u, v) edge set: every undirected
+    * edge once as (u, v) and once as (v, u). */
+  private def symmetric(canon: DataFrame): DataFrame =
+    canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
+
   /** The semi-synchronous Louvain sweep of [[louvainOneLevel]],
     * generalized to WEIGHTED canonical edges (u ≤ v, self-loops allowed
     * — the contracted-graph shape): edge weight replaces edge count in
@@ -843,9 +813,7 @@ object GraphOps {
     * checkpoint indices distinct across levels. */
   private[graft] def louvainSweepW(canonW: DataFrame, rounds: Int,
                             scoreOut: Column => Column, reliableEvery: Int,
-                            roundOffset: Int,
-                            broadcastNodeLimit: Long = 1000000L)
-      : (DataFrame, Boolean) = {
+                            roundOffset: Int): (DataFrame, Boolean) = {
     val nonLoop = canonW.filter(col("u") =!= col("v"))
     val loops = canonW.filter(col("u") === col("v"))
       .groupBy(col("u").as("node")).agg(sum("w").as("__wl"))
@@ -879,7 +847,7 @@ object GraphOps {
     // join broadcast beats shuffling the edge table — one count on the
     // persisted node table decides. Above the limit every node-keyed
     // join shuffles (web-scale regime), exactly as before.
-    val bcast = probeRow.getLong(1) <= broadcastNodeLimit
+    val bcast = probeRow.getLong(1) <= NodeLimit
     // the label state CARRIES the node's static weighted degree: the
     // per-round Σ_tot aggregate and the gain scoring read it off the
     // state instead of re-joining the degree table every round (two
@@ -903,19 +871,15 @@ object GraphOps {
       if (bcast) st.withColumn("stot",
         sum("deg").over(Window.partitionBy("label")))
       else st
-    // LAZY init checkpoint (r13): round 1's first consumer materializes
-    // it — the same deferral the per-round Ckpt.step(eager=false) below
-    // already applies to every later generation. At init every label is
-    // its own node, so Σ_tot(label) = deg exactly — no window needed.
-    var labels = {
-      val init = nodes.join(deg, "node")
-        .select(col("node"), col("node").as("label"), col("deg"))
-      (if (bcast) init.withColumn("stot", col("deg")) else init)
-        .localCheckpoint(eager = false)
-    }
-    for (i <- 1 to rounds) {
-      val lab = labels
-      val active = ((i + roundOffset) % 2).toLong
+    // At init every label is its own node, so Σ_tot(label) = deg exactly
+    // — no window needed. Rounds continue at roundOffset + 1, so parity
+    // classes and checkpoint indices stay distinct across levels.
+    val init = nodes.join(deg, "node")
+      .select(col("node"), col("node").as("label"), col("deg"))
+    val labels = Ckpt.iterate(
+        if (bcast) init.withColumn("stot", col("deg")) else init,
+        roundOffset + 1 to roundOffset + rounds, reliableEvery) { (lab, r) =>
+      val active = (r % 2).toLong
       val isActive = pmod(col("node").cast("long"), lit(2L)) === active
       val moved = louvainRound(sym, lab, active, mVal, scoreOut, labT, bcast)
       // coalesce BEFORE the checkpoint: the union's partition count is
@@ -924,20 +888,14 @@ object GraphOps {
       // (profiled: 64→96→128→160→192-task stages by round 4 for a
       // node-sized label state, pure scheduling overhead). Narrow merge,
       // no shuffle; the node-sized state re-spreads at the next round's
-      // exchange anyway. LAZY checkpoint (r13): the blocks are written
-      // as a side effect of the next round's first consumer (the label
-      // broadcast build) instead of a dedicated per-round job — the BPE
-      // Ckpt.step(eager=false) pattern; nothing unpersists the previous
-      // generation early, so the deferral is safe.
+      // exchange anyway.
       // In the broadcast regime the NEW labeling's Σ_tot is attached
       // here (withStot): the inactive rows' carried value is stale the
       // moment any active node moves, so it is recomputed globally —
       // one label-keyed window over the node-sized state per round.
-      labels = Ckpt.step(
-        withStot(moved.unionByName(
-            lab.filter(!isActive).select("node", "label", "deg")))
-          .coalesce(canonW.sparkSession.sparkContext.defaultParallelism),
-        i + roundOffset, reliableEvery, eager = false)
+      withStot(moved.unionByName(
+          lab.filter(!isActive).select("node", "label", "deg")))
+        .coalesce(canonW.sparkSession.sparkContext.defaultParallelism)
     }
     (labels.select("node", "label"), bcast)
   }
@@ -1029,9 +987,7 @@ object GraphOps {
     // in the bounded regime the node-sized label frame enters the
     // edge-shaped joins broadcast (post-localCheckpoint it has no stats,
     // so those joins would otherwise plan as full SortMergeJoins)
-    def h(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
-    val deg = sym.groupBy(col("u").as("node"))
+    val deg = symmetric(canon).groupBy(col("u").as("node"))
       .agg(count(lit(1)).cast("double").as("deg"))
     val mRow = canon.agg(count(lit(1)).cast("double").as("m"))
     val nNodes = labels.groupBy("label").agg(count(lit(1)).as("n_nodes"))
@@ -1042,12 +998,12 @@ object GraphOps {
     // join-order-independent (integral degrees), so probing deg⋈labNL
     // instead of labels⋈deg is value-identical.
     val labNL = labels.select(col("node"), col("label"))
-    val stotF = deg.join(h(labNL), "node")
+    val stotF = deg.join(bc(bcast)(labNL), "node")
       .groupBy("label").agg(sum("deg").as("stot"))
     val internal = canon
-      .join(h(labNL), col("u") === col("node"))
+      .join(bc(bcast)(labNL), col("u") === col("node"))
       .select(col("u"), col("v"), col("label").as("la"))
-      .join(h(labNL), col("v") === col("node"))
+      .join(bc(bcast)(labNL), col("v") === col("node"))
       .filter(col("la") === col("label"))
       .groupBy(col("la").as("label"))
       .agg(count(lit(1)).cast("double").as("n_int"))
@@ -1058,8 +1014,8 @@ object GraphOps {
     // regime broadcast too (community count ≤ node count ≤ the probed
     // bound; post-checkpoint lineage has no stats, so unhinted they
     // plan as SortMergeJoins — two exchanges + sorts each, r13b).
-    val comm = nNodes.join(h(stotF), "label")
-      .join(h(internal), Seq("label"), "left")
+    val comm = nNodes.join(bc(bcast)(stotF), "label")
+      .join(bc(bcast)(internal), Seq("label"), "left")
       .select(col("label"), col("n_nodes"),
         coalesce(col("n_int"), lit(0.0)).as("n_int"), col("stot"))
       .persist()
@@ -1083,15 +1039,9 @@ object GraphOps {
     *
     * Returns the surviving (node, degree) — degree within the core. */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
-            maxRounds: Int = 50, reliableEvery: Int = 0,
-            broadcastNodeLimit: Long = 1000000L): DataFrame = {
+            maxRounds: Int = 50, reliableEvery: Int = 0): DataFrame = {
     require(k >= 1, s"k >= 1, got $k")
-    var e = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+    var e = canonEdges(edges, aCol, bCol).localCheckpoint()
     var keepCount = -1L
     var round = 1
     var deg = e.select(col("u").as("node"))
@@ -1119,11 +1069,10 @@ object GraphOps {
         // Both semi-joins probe the SAME un-projected keep frame (column
         // equality instead of per-side renames) so the planner reuses ONE
         // broadcast exchange per round instead of building two (r13).
-        def h(df: DataFrame): DataFrame =
-          if (n <= broadcastNodeLimit) broadcast(df) else df
+        val keepNodes = bc(n <= NodeLimit)(keep.select("node"))
         e = Ckpt.step(
-          e.join(h(keep.select("node")), col("u") === col("node"), "left_semi")
-            .join(h(keep.select("node")), col("v") === col("node"), "left_semi"),
+          e.join(keepNodes, col("u") === col("node"), "left_semi")
+            .join(keepNodes, col("v") === col("node"), "left_semi"),
           round, reliableEvery, eager = false)
         deg = e.select(col("u").as("node"))
           .unionAll(e.select(col("v").as("node")))

@@ -294,11 +294,11 @@ class GlobalWindowLintSpec extends SparkSpec {
         "in 2 tasks)"),
       "q337_louvain" -> ("broadcast sides are the regime-probed node-sized " +
         "label/Σ_tot frames: hint applied only when nodes.count() ≤ " +
-        "broadcastNodeLimit (partitioned SortMergeJoin fallback above — " +
+        "GraphOps.NodeLimit (partitioned SortMergeJoin fallback above — " +
         "the pageRank regime convention)"),
       "q347_louvain_multilevel" -> ("broadcast sides are the regime-probed " +
         "node-sized contraction/label frames: hint applied only when " +
-        "nodes.count() ≤ broadcastNodeLimit (partitioned fallback above)")
+        "nodes.count() ≤ GraphOps.NodeLimit (partitioned fallback above)")
     )
 
   /** Explicit broadcast() hints in the ANALYZED plan whose hinted subtree

@@ -64,12 +64,12 @@ class GraphOpsSpec extends SparkSpec {
     val e = Seq(("a", "b", 1.0), ("b", "a", 1.0), ("a", "c", 1.0),
         ("c", "d", 2.0), ("d", "a", 1.0))
       .toDF("src", "dst", "w")
-    def run(limit: Long) = GraphOps.pageRank(e, "src", "dst", "w",
+    def run(hint: Option[Boolean]) = GraphOps.pageRank(e, "src", "dst", "w",
         damping = 0.85, iters = 4, scoreOut = identity,
-        broadcastNodeLimit = limit)
+        broadcastRank = hint)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val fast = run(Long.MaxValue) // 4 nodes ≤ limit → broadcast path
-    val scale = run(0L)           // forces the partitioned-rank path
+    val fast = run(None)         // 4 nodes ≤ NodeLimit → broadcast path
+    val scale = run(Some(false)) // forces the partitioned-rank path
     assert(fast.keySet == scale.keySet)
     fast.foreach { case (n, r) =>
       assert(math.abs(r - scale(n)) < 1e-12, s"$n: $r vs ${scale(n)}")
@@ -190,24 +190,6 @@ class GraphOpsSpec extends SparkSpec {
     val trunc = GraphOps.bfsHops(e, "s", "d", seeds = Seq(1L), maxHops = 1)
       .collect().map(_.getLong(0)).toSet
     assert(trunc == Set(1L, 2L, 4L))
-  }
-
-  /** Count the Spark jobs a thunk schedules, via the public
-    * status-tracker job-group API (the status store updates async from
-    * the listener bus, so poll until the count is stable). */
-  private def jobsIn(group: String)(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try f finally sc.clearJobGroup()
-    var prev = -1
-    var cur = sc.statusTracker.getJobIdsForGroup(group).length
-    var spins = 0
-    while (cur != prev && spins < 50) {
-      prev = cur; Thread.sleep(100)
-      cur = sc.statusTracker.getJobIdsForGroup(group).length
-      spins += 1
-    }
-    cur
   }
 
   test("broadcastRank hint: identical ranks, strictly fewer jobs") {

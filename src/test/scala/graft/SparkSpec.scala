@@ -8,6 +8,24 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfTiny = "/root/testdata/sf0.001"
+
+  /** Count the Spark jobs a thunk schedules, via the public
+    * status-tracker job-group API (the status store updates async from
+    * the listener bus, so poll until the count is stable). */
+  def jobsIn(group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    var prev = -1
+    var cur = sc.statusTracker.getJobIdsForGroup(group).length
+    var spins = 0
+    while (cur != prev && spins < 50) {
+      prev = cur; Thread.sleep(100)
+      cur = sc.statusTracker.getJobIdsForGroup(group).length
+      spins += 1
+    }
+    cur
+  }
 }
 
 object SparkSpec {

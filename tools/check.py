@@ -5,6 +5,9 @@ row-sorted) values against the Spark parquet dumps produced by graft.Verify.
 
 Usage: python3 tools/check.py [sf_dir] [verify_out_dir] [--json OUT.json] [-j N]
 
+Every query listed in the verify dir's failed.tsv (written by graft.Verify:
+one query<TAB>error line per query that threw) is a FAIL, --subset or not.
+
 With --json, also writes a machine-readable summary (counts + per-query
 status/rows) so every round has a committed correctness record even if the
 driver-side artifact arrives empty (round-8 failure mode).
@@ -117,6 +120,15 @@ def check_one(name):
         return name, {"status": "fail", "reason": "value mismatch"}, lines
 
 
+def read_failed(path):
+    """{query: error} from graft.Verify's failed.tsv ({} when absent)."""
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        rows = [ln.rstrip("\n").split("\t", 1) for ln in f.readlines()[1:]]
+    return {r[0]: (r[1] if len(r) > 1 else "") for r in rows if r[0]}
+
+
 def main():
     args = list(sys.argv[1:])
     json_out = None
@@ -138,13 +150,20 @@ def main():
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     n_pass = n_fail = 0
     all_dirs = {os.path.basename(p) for p in glob.glob(f"{out}/*") if os.path.isdir(p)}
-    # a query that threw inside graft.Verify writes no dir — that is a FAIL,
-    # not a silent skip
-    for missing in (() if subset else sorted(set(oracle) - all_dirs)):
+    # a query that threw inside graft.Verify is a FAIL, never a silent skip:
+    # Verify lists it in failed.tsv (any dir it has is stale or partial)
+    failed = read_failed(f"{out}/failed.tsv")
+    for name, err in sorted(failed.items()):
+        print(f"FAIL {name}: query failed in Verify: {err}")
+        per_query[name] = {"status": "fail", "reason": f"failed in Verify: {err}"}
+        n_fail += 1
+    # without --subset every oracle entry must have written output
+    for missing in (() if subset else sorted(set(oracle) - all_dirs - set(failed))):
         print(f"FAIL {missing}: no spark output (query failed in Verify)")
         per_query[missing] = {"status": "fail", "reason": "no spark output"}
         n_fail += 1
-    names = sorted(all_dirs)
+    names = sorted(all_dirs - set(failed))
+    entries = len(all_dirs | set(failed))
     with mp.Pool(jobs, initializer=_init, initargs=(sf, out, oracle)) as pool:
         for name, res, lines in pool.imap_unordered(check_one, names, chunksize=1):
             per_query[name] = res
@@ -154,11 +173,11 @@ def main():
                 n_pass += 1
             elif res["status"] == "fail":
                 n_fail += 1
-    print(f"== {n_pass} pass, {n_fail} fail, {len(all_dirs)} total")
+    print(f"== {n_pass} pass, {n_fail} fail, {entries} total")
     if json_out:
         n_rows_only = sum(1 for v in per_query.values() if v["status"] == "rows_only")
         summary = {
-            "sf_dir": sf, "entries": len(all_dirs),
+            "sf_dir": sf, "entries": entries,
             "oracle_green": n_pass, "rows_only": n_rows_only, "fail": n_fail,
             "queries": {k: per_query[k] for k in sorted(per_query)},
         }
