@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Iterative graph algorithms as unrolled DataFrame joins. The per-node
   * state (the rank vector) is always node-sized — orders of magnitude
@@ -12,32 +13,83 @@ import org.apache.spark.sql.functions._
   * framework). Companion to the star-contraction connected components in
   * [[DedupOps]].
   *
-  * Each superstep checkpoints the node-sized state LAZILY (the
-  * fixed-horizon operators through [[Ckpt.iterate]], the data-dependent
-  * loops through [[Ckpt.step]] with `eager = false`): the blocks are
-  * written by the state's first consumer, and the persisted normalized
-  * edge table is reused — the Pregel execution model. A pure lazy plan is
-  * NOT an option here: the rank vector feeds three consumers per step
-  * (dangling mass, contribution join, next vector), so unmaterialized
-  * lineage grows ~3^iters logical nodes and Catalyst analysis time
-  * explodes long before execution would.
+  * Three physical regimes for the superstep operators (pageRank, hits,
+  * bfsHops, kCore, labelPropagation, the Louvain sweep), picked per call:
+  *  - DRIVER-LOCAL: the operator builds and persists its merged edge
+  *    table, and one job collects at most [[LocalEdgeLimit]] + 1 of its
+  *    rows. At or below the bound the supersteps run on the driver over a
+  *    [[LocalGraph]] (dense node index, CSR adjacency) with the same
+  *    semantics, and the result returns as a LocalRelation: no superstep,
+  *    probe or checkpoint job, and none at all until the result is
+  *    drained.
+  *  - BROADCAST: above it, node-sized state of at most [[NodeLimit]]
+  *    nodes enters the edge joins broadcast.
+  *  - PARTITIONED: above both, every node-keyed join shuffles (the
+  *    web-graph regime).
   *
-  * One broadcast regime for every operator: node-sized state whose node
-  * count is at most [[NodeLimit]] enters the edge joins broadcast;
-  * above it every node-keyed join shuffles (the web-graph regime). */
+  * In the two distributed regimes each superstep checkpoints the
+  * node-sized state LAZILY (the fixed-horizon operators through
+  * [[Ckpt.iterate]], the data-dependent loops through [[Ckpt.step]] with
+  * `eager = false`): the blocks are written by the state's first
+  * consumer, and the persisted normalized edge table is reused — the
+  * Pregel execution model. A pure lazy plan is NOT an option there: the
+  * rank vector feeds three consumers per step (dangling mass,
+  * contribution join, next vector), so unmaterialized lineage grows
+  * ~3^iters logical nodes and Catalyst analysis time explodes long before
+  * execution would. */
 object GraphOps {
+
+  /** Driver-local regime bound: a merged edge table of at most this many
+    * rows is collected and iterated on the driver. 2^22, the
+    * [[DedupOps.nearDupClusters]] gate: a few tens of MB of edge arrays,
+    * far inside a driver heap. A graph over a vocabulary of V nodes has at
+    * most V² merged edges, so vocabulary-sized graphs always land here. */
+  val LocalEdgeLimit: Long = 1L << 22
 
   /** Broadcast-regime bound: node-sized state of at most this many nodes
     * rides the edge joins broadcast. */
   val NodeLimit: Long = 1000000L
 
   /** Super-edge bound of [[louvainMultiLevel]]'s driver-side level-2
-    * sweep ([[seqLocalMoving]]); above it level 2 runs distributed. */
+    * sweep ([[seqLocalMoving]]); above it level 2 runs as a sweep. */
   private val SeqEdgeLimit: Long = 1000000L
 
   /** `broadcast(df)` in the broadcast regime, `df` otherwise. */
   private def bc(on: Boolean)(df: DataFrame): DataFrame =
     if (on) broadcast(df) else df
+
+  /** The driver-local regime's gate over a persisted edge table `e` whose
+    * columns 0 and 1 are the endpoint ids: `run`'s result when `e` has at
+    * most [[LocalEdgeLimit]] rows (one job, which otherwise fills `e`'s
+    * cache for the distributed body), the ids are non-null and of one
+    * [[LocalGraph.supports]]ed type, and `run` mirrors the case (it
+    * returns None for inputs whose distributed semantics it does not
+    * replay, e.g. a division by zero). `e` is released when the local
+    * result stands. */
+  private def onDriver(e: DataFrame)(run: Array[Row] => Option[DataFrame]): Option[DataFrame] = {
+    val dt = e.schema(0).dataType
+    if (!LocalGraph.supports(dt) || e.schema(1).dataType != dt) None
+    else LocalGraph.collectAtMost(e, LocalEdgeLimit)
+      .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      .flatMap(run)
+      .map { out => e.unpersist(blocking = false); out }
+  }
+
+  /** The node column of an edge table: `a` and `b` stacked as "node"
+    * (analysis only — the field the distributed bodies' node tables
+    * carry). */
+  private def nodeField(e: DataFrame, a: String, b: String): StructField =
+    e.select(col(a).as("node")).unionByName(e.select(col(b).as("node")))
+      .schema("node")
+
+  /** Parallel edges merged by weight sum into (src, dst, w), persisted:
+    * the edge table of [[pageRank]] and [[hits]]. */
+  private[graft] def mergedEdges(edges: DataFrame, srcCol: String,
+      dstCol: String, weightCol: String): DataFrame =
+    edges
+      .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .agg(sum(col(weightCol).cast("double")).as("w"))
+      .persist()
 
   /** Weighted PageRank by `iters` unrolled power-iteration steps:
     * r ← (1−d)/N + d·(Pᵀr + dangling/N), where P is the out-weight-
@@ -51,7 +103,9 @@ object GraphOps {
     * rank vector, and one dst-keyed sum. Parallel edges are pre-merged
     * so the transition weights are well-defined.
     *
-    * Two physical regimes, switched on |nodes| vs [[NodeLimit]]:
+    * Three regimes (see the header): up to [[LocalEdgeLimit]] merged
+    * edges the iteration runs on the driver ([[pageRankLocal]]); above
+    * it [[pageRankDistributed]] switches on |nodes| vs [[NodeLimit]]:
     *  - FAST PATH (|nodes| ≤ NodeLimit): the rank vector lives in ONE
     *    partition and enters every join broadcast — the only shuffle per
     *    superstep is the dst-keyed contribution sum. Right for the
@@ -63,38 +117,70 @@ object GraphOps {
     *    node-partitioned (the node-keyed join fixes the distribution),
     *    so the checkpoint preserves it and the next step's node-keyed
     *    joins reuse the partitioning without an extra exchange.
-    *
-    * Regime selection: `broadcastRank = Some(true)` is a CALLER HINT that
-    * skips the probe job entirely — the caller knows the node universe is
-    * bounded (a vocabulary-keyed graph), and the single fast-path
-    * partition computes N inside the task that builds the vector. With
-    * `None` (default) or `Some(false)` one node-count aggregate runs, and
-    * its collected value doubles as the literal N everywhere; `None`
-    * picks the regime from it (`N ≤ NodeLimit`), `Some(false)` forces the
-    * scale path. The probe is folded into work the iteration needed
-    * anyway, never a count-only extra job.
+    * The distributed body's one node-count aggregate picks the path, and
+    * its collected value doubles as the literal N everywhere.
     *
     * Fault tolerance: `reliableEvery` — see [[Ckpt.iterate]] (default 0 =
     * every superstep localCheckpoints lazily; set k > 0 plus a
     * `setCheckpointDir` for durable snapshots every k supersteps on
-    * long cluster runs).
+    * long cluster runs). The driver-local regime has no supersteps to
+    * checkpoint.
     *
     * Returns (node, rank) — Σ rank = 1 up to float noise. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                weightCol: String, damping: Double, iters: Int,
                scoreOut: Column => Column,
-               broadcastRank: Option[Boolean] = None,
                reliableEvery: Int = 0): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1,
       s"bad pagerank params: iters=$iters damping=$damping")
     // the merged edge table is the expensive subtree (it may sit on top
-    // of an arbitrary join pipeline): persist it, because nodes, out-
-    // weights and the transition table all derive from it — unpersisted,
-    // the upstream pipeline re-executes once per consumer
-    val e = edges
-      .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .agg(sum(col(weightCol).cast("double")).as("w"))
-      .persist()
+    // of an arbitrary join pipeline): persisted, because the regime
+    // collect and every distributed consumer derive from it
+    val e = mergedEdges(edges, srcCol, dstCol, weightCol)
+    onDriver(e)(rows => pageRankLocal(e, rows, damping, iters, scoreOut))
+      .getOrElse(pageRankDistributed(e, damping, iters, scoreOut, reliableEvery))
+  }
+
+  /** [[pageRank]]'s supersteps on the driver over the collected merged
+    * edges: the same r ← (1−d)/N + d·(Σ r·p + dangling/N) with the same
+    * operation order as [[pageRankStep]]. None (distributed body) when a
+    * weight is null or a source's out-weight is zero. */
+  private def pageRankLocal(e: DataFrame, rows: Array[Row], damping: Double,
+                            iters: Int, scoreOut: Column => Column): Option[DataFrame] =
+    if (rows.exists(_.isNullAt(2))) None
+    else {
+      val node = nodeField(e, "src", "dst")
+      val g = LocalGraph(rows, node.dataType)
+      val w = rows.map(_.getDouble(2))
+      val outw = new Array[Double](g.n)
+      val hasOut = new Array[Boolean](g.n)
+      for (k <- 0 until g.m) { outw(g.src(k)) += w(k); hasOut(g.src(k)) = true }
+      if (g.src.exists(outw(_) == 0.0)) None
+      else {
+        val p = Array.tabulate(g.m)(k => w(k) / outw(g.src(k)))
+        val n = g.n.toDouble
+        var r = Array.fill(g.n)(1.0 / n)
+        for (_ <- 1 to iters) {
+          var dm = 0.0
+          for (i <- 0 until g.n if !hasOut(i)) dm += r(i)
+          val cin = new Array[Double](g.n)
+          for (k <- 0 until g.m) cin(g.dst(k)) += r(g.src(k)) * p(k)
+          r = Array.tabulate(g.n)(i =>
+            (1.0 - damping) / n + damping * (cin(i) + dm / n))
+        }
+        Some(LocalGraph.frame(e.sparkSession,
+            g.ids.indices.map(i => Row(g.ids(i), r(i))),
+            StructType(Seq(node, StructField("r", DoubleType))))
+          .select(col("node"), scoreOut(col("r")).as("rank")))
+      }
+    }
+
+  /** [[pageRank]]'s distributed body over the persisted merged edge table
+    * `e` (src, dst, w). `bcast` picks the path; None probes |nodes|
+    * against [[NodeLimit]] (the count is needed as N either way). */
+  private[graft] def pageRankDistributed(e: DataFrame, damping: Double,
+      iters: Int, scoreOut: Column => Column, reliableEvery: Int,
+      bcast: Option[Boolean] = None): DataFrame = {
     val outw = e.groupBy("src").agg(sum("w").as("__ow"))
     // the per-step working set: read `iters` times
     val norm = e.join(outw, "src")
@@ -110,36 +196,13 @@ object GraphOps {
     // iterative job-count floor was the measured cost, q233 scaling 0.48)
     val srcSet = norm.select(col("src").as("node")).distinct()
       .withColumn("__has", lit(1))
-    def flagged(on: Boolean): DataFrame =
-      nodeTab.join(bc(on)(srcSet), Seq("node"), "left")
-        .select(col("node"), col("__has").isNull.as("__dang"))
-    // hinted broadcast: zero probe jobs AND zero aggregate branch — the
-    // single fast-path partition computes N inside the same task that
-    // builds the vector. Otherwise ONE aggregate job whose value serves
-    // both the regime decision and the literal N.
-    val (bcastRank, rank0) = broadcastRank match {
-      case Some(true) =>
-        import org.apache.spark.sql.Row
-        import org.apache.spark.sql.catalyst.encoders.RowEncoder
-        import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructType}
-        val nt = flagged(on = true).coalesce(1)
-        val schema = StructType(Seq(
-          StructField("node", nodeTab.schema("node").dataType),
-          StructField("r", DoubleType, nullable = false),
-          StructField("__N", DoubleType, nullable = false),
-          StructField("__dang", BooleanType, nullable = false)))
-        (true, nt.mapPartitions { it =>
-          val rows = it.toArray
-          val n = rows.length.toDouble
-          rows.iterator.map(row => Row(row.get(0), 1.0 / n, n, row.getBoolean(1)))
-        }(RowEncoder.encoderFor(schema)))
-      case hint =>
-        val n = nodeTab.agg(count(lit(1)).cast("double")).first().getDouble(0)
-        val on = hint.getOrElse(n <= NodeLimit)
-        (on, flagged(on)
-          .select(col("node"), lit(1.0 / n).as("r"), lit(n).as("__N"),
-            col("__dang")))
-    }
+    // ONE aggregate job whose value serves both the regime decision and
+    // the literal N
+    val n = nodeTab.agg(count(lit(1)).cast("double")).first().getDouble(0)
+    val bcastRank = bcast.getOrElse(n <= NodeLimit)
+    val rank0 = nodeTab.join(bc(bcastRank)(srcSet), Seq("node"), "left")
+      .select(col("node"), lit(1.0 / n).as("r"), lit(n).as("__N"),
+        col("__has").isNull.as("__dang"))
     // the fast path keeps the vector in ONE partition; the scale path
     // keeps the node-keyed join's partitioning
     def shaped(df: DataFrame): DataFrame = if (bcastRank) df.coalesce(1) else df
@@ -195,15 +258,17 @@ object GraphOps {
     * list — the reach/blast-radius primitive (supply-chain exposure,
     * contagion radius, influence neighborhoods).
     *
-    * Pregel discipline throughout (the [[pageRank]] lesson): the edge
-    * set is persisted once; per superstep the frontier expands through
-    * ONE equi-join, new nodes are a LEFT ANTI against the visited set,
-    * and both frames go through a lazy [[Ckpt.step]] so lineage stays
-    * O(1) instead of k^hops. The per-hop `count()` of the new frontier is
-    * the hop's one scheduler job — it materializes the frontier's
-    * checkpoint (and the previous hop's visited state) and its zero stops
-    * dead subtrees early. State is node-sized (node, hop); the frontier
-    * join shuffles on the node key, never broadcasting anything unbounded.
+    * Up to [[LocalEdgeLimit]] edges the frontier expands on the driver
+    * ([[bfsLocal]]). Above it, [[bfsDistributed]] follows the Pregel
+    * discipline (the [[pageRank]] lesson): the edge set is persisted
+    * once; per superstep the frontier expands through ONE equi-join, new
+    * nodes are a LEFT ANTI against the visited set, and both frames go
+    * through a lazy [[Ckpt.step]] so lineage stays O(1) instead of
+    * k^hops. The per-hop `count()` of the new frontier is the hop's one
+    * scheduler job — it materializes the frontier's checkpoint (and the
+    * previous hop's visited state) and its zero stops dead subtrees
+    * early. State is node-sized (node, hop); the frontier join shuffles
+    * on the node key, never broadcasting anything unbounded.
     *
     * Fault tolerance: `reliableEvery` — see [[Ckpt.step]] (default 0 =
     * localCheckpoint every superstep; k > 0 plus a `setCheckpointDir`
@@ -216,13 +281,59 @@ object GraphOps {
               seeds: Seq[Long], maxHops: Int,
               directed: Boolean = false, reliableEvery: Int = 0): DataFrame = {
     require(maxHops >= 0 && maxHops <= 50, s"maxHops in [0,50], got $maxHops")
-    val spark = edges.sparkSession
-    import spark.implicits._
+    val e = bfsEdges(edges, srcCol, dstCol, directed)
+    onDriver(e)(rows => Some(bfsLocal(e, rows, seeds, maxHops)))
+      .getOrElse(bfsDistributed(e, seeds, maxHops, reliableEvery))
+  }
+
+  /** [[bfsHops]]' edge table: (s, d) as longs, both orientations unless
+    * `directed`, deduped and persisted. */
+  private[graft] def bfsEdges(edges: DataFrame, srcCol: String, dstCol: String,
+                              directed: Boolean): DataFrame = {
     val e0 = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("d"))
-    val e = (if (directed) e0
-             else e0.union(e0.select(col("d").as("s"), col("s").as("d"))))
+    (if (directed) e0
+     else e0.union(e0.select(col("d").as("s"), col("s").as("d"))))
       .distinct().persist()
+  }
+
+  /** [[bfsHops]] on the driver over the collected edge table: hop by hop,
+    * each unvisited out-neighbor of the frontier joins at the current
+    * hop; an empty frontier stops early. Seeds come first, at hop 0, as
+    * given (a repeated seed repeats, as in the distributed body). */
+  private def bfsLocal(e: DataFrame, rows: Array[Row], seeds: Seq[Long],
+                       maxHops: Int): DataFrame = {
+    val g = LocalGraph(rows, LongType, seeds.map(Long.box))
+    val (off, to, _) = g.csr(both = false)
+    val seen = new Array[Boolean](g.n)
+    val out = seeds.map(s => Row(s, 0)).toBuffer
+    var frontier = seeds.map(s => g.indexOf(Long.box(s))).distinct.toArray
+    frontier.foreach(seen(_) = true)
+    var h = 1
+    while (h <= maxHops && frontier.nonEmpty) {
+      val next = scala.collection.mutable.ArrayBuilder.make[Int]
+      for (f <- frontier; j <- off(f) until off(f + 1) if !seen(to(j))) {
+        seen(to(j)) = true
+        next += to(j)
+        out += Row(g.ids(to(j)), h)
+      }
+      frontier = next.result()
+      h += 1
+    }
+    // the distributed body's visited table takes the edge column's
+    // nullability once a hop has added a node (a union), not before
+    val grew = out.length > seeds.length
+    LocalGraph.frame(e.sparkSession, out.toSeq, StructType(Seq(
+      StructField("node", LongType, grew && e.schema("d").nullable),
+      StructField("hop", IntegerType, nullable = false))))
+  }
+
+  /** [[bfsHops]]' distributed body over the persisted edge table `e`
+    * (s, d) of [[bfsEdges]]. */
+  private[graft] def bfsDistributed(e: DataFrame, seeds: Seq[Long],
+                                    maxHops: Int, reliableEvery: Int): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
     var visited = seeds.toDF("node").withColumn("hop", lit(0))
       .localCheckpoint()
     var frontier = visited
@@ -372,31 +483,79 @@ object GraphOps {
     * (authority) — on an event-transition graph, "what funnels flow"
     * vs "what flow lands on".
     *
-    * Same superstep shape and regimes as [[pageRank]]: parallel edges
-    * pre-merged and persisted; each iteration is one src-keyed and one
-    * dst-keyed edge⋈vector equi-join plus a scalar normalizer crossjoin
-    * (1-row aggregate — AQE broadcasts it); vectors are node-sized and
-    * lazily checkpointed per step by [[Ckpt.iterate]] (O(1) lineage,
-    * `reliableEvery` for durable snapshots). `broadcastVec = Some(true)`
-    * is the bounded-vocabulary caller hint (the q233 convention) — the
-    * vector enters the edge joins broadcast; `Some(false)` keeps it
-    * hash-partitioned for web-scale graphs; `None` probes |nodes| against
-    * [[NodeLimit]].
+    * Same regimes as [[pageRank]]: up to [[LocalEdgeLimit]] merged edges
+    * the steps run on the driver ([[hitsLocal]]); above it
+    * [[hitsDistributed]] runs each iteration as one src-keyed and one
+    * dst-keyed edge⋈vector equi-join plus a scalar normalizer, with
+    * node-sized vectors lazily checkpointed per step by [[Ckpt.iterate]]
+    * (O(1) lineage, `reliableEvery` for durable snapshots), broadcast
+    * into the edge joins while |nodes| ≤ [[NodeLimit]] and
+    * hash-partitioned above it.
     *
     * Returns (node, hub, authority), each column summing to 1; nodes
     * with no out-edges (resp. in-edges) score 0 on that side. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            weightCol: String, iters: Int, scoreOut: Column => Column,
-           broadcastVec: Option[Boolean] = None,
            reliableEvery: Int = 0): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
-    val e = edges
-      .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .agg(sum(col(weightCol).cast("double")).as("w"))
-      .persist()
+    val e = mergedEdges(edges, srcCol, dstCol, weightCol)
+    onDriver(e)(rows => hitsLocal(e, rows, iters, scoreOut))
+      .getOrElse(hitsDistributed(e, iters, scoreOut, reliableEvery))
+  }
+
+  /** [[hits]] on the driver over the collected merged edges: h = Σ w·a
+    * over out-edges, a = Σ w·h over in-edges, each L1-normalized per
+    * step, hub and authority of the last step. None (distributed body)
+    * when a weight is null or a normalizer is zero. */
+  private def hitsLocal(e: DataFrame, rows: Array[Row], iters: Int,
+                        scoreOut: Column => Column): Option[DataFrame] =
+    if (rows.exists(_.isNullAt(2))) None
+    else {
+      val node = nodeField(e, "src", "dst")
+      val g = LocalGraph(rows, node.dataType)
+      val w = rows.map(_.getDouble(2))
+      val hasOut = new Array[Boolean](g.n)
+      val hasIn = new Array[Boolean](g.n)
+      g.src.foreach(hasOut(_) = true)
+      g.dst.foreach(hasIn(_) = true)
+      // one half-step: Σ w·x over the edges into `to`'s endpoint, divided
+      // by the total over the nodes that received a term
+      def half(x: Array[Double], from: Array[Int], to: Array[Int],
+               has: Array[Boolean]): Option[Array[Double]] = {
+        val raw = new Array[Double](g.n)
+        for (k <- 0 until g.m) raw(to(k)) += w(k) * x(from(k))
+        var tot = 0.0
+        for (i <- 0 until g.n if has(i)) tot += raw(i)
+        if (tot == 0.0) None else Some(raw.map(_ / tot))
+      }
+      val a0 = Array.fill(g.n)(1.0 / g.n)
+      val last = (1 to iters).foldLeft(Option((a0, a0))) { (st, _) =>
+        for {
+          (_, a) <- st
+          h <- half(a, g.dst, g.src, hasOut)
+          an <- half(h, g.src, g.dst, hasIn)
+        } yield (h, an)
+      }
+      last.map { case (h, a) =>
+        LocalGraph.frame(e.sparkSession,
+            g.ids.indices.map(i => Row(g.ids(i),
+              if (hasOut(i)) h(i) else 0.0, if (hasIn(i)) a(i) else 0.0)),
+            StructType(Seq(node, StructField("h", DoubleType, nullable = false),
+              StructField("a", DoubleType, nullable = false))))
+          .select(col("node"), scoreOut(col("h")).as("hub"),
+            scoreOut(col("a")).as("authority"))
+      }
+    }
+
+  /** [[hits]]'s distributed body over the persisted merged edge table `e`
+    * (src, dst, w). `bcast` picks the regime; None probes |nodes| against
+    * [[NodeLimit]]. */
+  private[graft] def hitsDistributed(e: DataFrame, iters: Int,
+      scoreOut: Column => Column, reliableEvery: Int,
+      bcast: Option[Boolean] = None): DataFrame = {
     val nodeTab = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct().persist()
-    val bcast = broadcastVec.getOrElse(nodeTab.count() <= NodeLimit)
+    val on = bcast.getOrElse(nodeTab.count() <= NodeLimit)
     // normalizer: in the broadcast regime the vector is node-bounded and
     // about to be coalesced to ONE partition anyway, so the L1 total is a
     // frame-local window over that single partition — no per-iteration
@@ -406,7 +565,7 @@ object GraphOps {
     // path keeps the scalar aggregate + crossjoin — never a partition-less
     // window over an unbounded vector.
     def l1norm(raw: DataFrame, c: String): DataFrame =
-      if (bcast)
+      if (on)
         raw.select(col("node"),
           (col(c) / sum(c).over(Window.partitionBy())).as(c)).coalesce(1)
       else {
@@ -422,13 +581,13 @@ object GraphOps {
     // second time there (same total edge passes, half the jobs).
     var hub: DataFrame = null
     val auth = Ckpt.iterate(
-      (if (bcast) n0.coalesce(1) else n0)
+      (if (on) n0.coalesce(1) else n0)
         .select(col("node"), (lit(1.0) / col("__N")).as("a")),
       1 to iters, reliableEvery) { (a, i) =>
-      val hn = l1norm(e.join(bc(bcast)(a), col("dst") === col("node"))
+      val hn = l1norm(e.join(bc(on)(a), col("dst") === col("node"))
         .groupBy(col("src").as("node")).agg(sum(col("w") * col("a")).as("h")), "h")
       hub = if (i == iters) Ckpt.step(hn, i, reliableEvery, eager = false) else hn
-      l1norm(e.join(bc(bcast)(hub), col("src") === col("node"))
+      l1norm(e.join(bc(on)(hub), col("src") === col("node"))
         .groupBy(col("dst").as("node")).agg(sum(col("w") * col("h")).as("a")), "a")
     }
     nodeTab
@@ -491,17 +650,59 @@ object GraphOps {
     * LPA may oscillate on bipartite structures; a fixed horizon is the
     * standard fix and keeps the oracle finite).
     *
-    * Superstep cost: one edge⋈label equi-join + one (node, label) count
-    * + one per-node argmax window — all keyed on node ids, state is
-    * node-sized and lazily checkpointed per superstep by [[Ckpt.iterate]]
-    * (the Pregel discipline). The label state enters the edge join
-    * broadcast while |nodes| ≤ [[NodeLimit]] (the edge table is never
-    * shuffled); above it the join shuffles.
+    * Up to [[LocalEdgeLimit]] canonical edges the supersteps run on the
+    * driver ([[labelPropagationLocal]]). Above it
+    * ([[labelPropagationDistributed]]) a superstep is one edge⋈label
+    * equi-join + one (node, label) count + one per-node argmax window —
+    * all keyed on node ids, state is node-sized and lazily checkpointed
+    * per superstep by [[Ckpt.iterate]] (the Pregel discipline). The label
+    * state enters the edge join broadcast while |nodes| ≤ [[NodeLimit]]
+    * (the edge table is never shuffled); above it the join shuffles.
     * Returns (node, label) — nodes sharing a label are one community. */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
                        iters: Int, reliableEvery: Int = 0): DataFrame = {
     require(iters >= 1 && iters <= 20, s"1 <= iters <= 20, got $iters")
-    val sym = symmetric(canonEdges(edges, aCol, bCol)).persist()
+    val canon = canonEdges(edges, aCol, bCol).persist()
+    onDriver(canon)(rows => Some(labelPropagationLocal(canon, rows, iters)))
+      .getOrElse(labelPropagationDistributed(canon, iters, reliableEvery))
+  }
+
+  /** [[labelPropagation]] on the driver over the collected canonical
+    * edges: synchronous rounds, each node takes its neighbors' modal
+    * label, ties to the smallest (node indices follow Spark's order, so
+    * the smallest index is the smallest label). */
+  private def labelPropagationLocal(canon: DataFrame, rows: Array[Row],
+                                    iters: Int): DataFrame = {
+    val node = symmetric(canon).schema("u")
+    val g = LocalGraph(rows, node.dataType)
+    val (off, to, _) = g.csr(both = true)
+    val cnt = new Array[Int](g.n)
+    var label = Array.range(0, g.n)
+    for (_ <- 1 to iters) {
+      val prev = label
+      label = Array.tabulate(g.n) { i =>
+        val nbs = off(i) until off(i + 1)
+        nbs.foreach(j => cnt(prev(to(j))) += 1)
+        var best = -1
+        for (j <- nbs) {
+          val l = prev(to(j))
+          if (best < 0 || cnt(l) > cnt(best) || (cnt(l) == cnt(best) && l < best))
+            best = l
+        }
+        nbs.foreach(j => cnt(prev(to(j))) = 0)
+        best
+      }
+    }
+    LocalGraph.frame(canon.sparkSession,
+      g.ids.indices.map(i => Row(g.ids(i), g.ids(label(i)))),
+      StructType(Seq(node.copy(name = "node"), node.copy(name = "label"))))
+  }
+
+  /** [[labelPropagation]]'s distributed body over the persisted canonical
+    * edge table `canon` (u < v). */
+  private[graft] def labelPropagationDistributed(canon: DataFrame, iters: Int,
+                                                 reliableEvery: Int): DataFrame = {
+    val sym = symmetric(canon).persist()
     val nodes = sym.select(col("u").as("node")).distinct().persist()
     val bcast = nodes.count() <= NodeLimit
     val pick = Window.partitionBy("node").orderBy(col("c").desc, col("nl").asc)
@@ -541,13 +742,14 @@ object GraphOps {
     * number: the returned modularity
     * Q = Σ_C [n_int(C)/m − (Σ_tot(C)/(2m))²].
     *
-    * Scale shape: per round one label-keyed Σ_tot aggregate, one
-    * edge-shaped neighbor-community count, a full-outer candidate
-    * union, and a per-node argmax window — all partitioned by node or
-    * label, nothing corpus-global except the scalar edge-count m
-    * (a scalar-aggregate crossjoin, no collected metadata). Labels are
-    * lazily checkpointed per round by [[Ckpt.iterate]] (the Pregel
-    * discipline, with the `reliableEvery` durable-checkpoint contract).
+    * Up to [[LocalEdgeLimit]] canonical edges the sweep and the summary
+    * run on the driver ([[louvainLocal]]). Above it the distributed
+    * shape: per round one label-keyed Σ_tot aggregate, one edge-shaped
+    * neighbor-community count, a full-outer candidate union, and a
+    * per-node argmax window — all partitioned by node or label, nothing
+    * corpus-global except the scalar edge-count m. Labels are lazily
+    * checkpointed per round by [[Ckpt.iterate]] (the Pregel discipline,
+    * with the `reliableEvery` durable-checkpoint contract).
     *
     * Returns the `topK` communities by size:
     * (community, n_nodes, n_internal, sigma_tot, modularity) —
@@ -557,17 +759,33 @@ object GraphOps {
                       reliableEvery: Int = 0): DataFrame = {
     require(rounds >= 1 && rounds <= 10, s"1 <= rounds <= 10, got $rounds")
     val canon = canonEdges(edges, aCol, bCol).persist()
+    onDriver(canon)(rows =>
+        louvainLocal(canon, rows, rounds, topK, scoreOut, multiLevel = false))
+      .getOrElse(louvainOneLevelDistributed(canon, rounds, topK, scoreOut,
+        reliableEvery))
+  }
+
+  /** [[louvainOneLevel]]'s distributed body over the persisted canonical
+    * edge table `canon` (u < v). */
+  private[graft] def louvainOneLevelDistributed(canon: DataFrame, rounds: Int,
+      topK: Int, scoreOut: Column => Column, reliableEvery: Int): DataFrame = {
     val (labels, bcast) = louvainSweepW(canon.withColumn("w", lit(1.0)),
       rounds, scoreOut, reliableEvery, roundOffset = 0)
     val (comm, qRow) = communitySummary(canon, labels, bcast)
-    comm.crossJoin(broadcast(qRow))
-      .select(col("label").as("community"), col("n_nodes"),
+    louvainOut(comm.crossJoin(broadcast(qRow)), topK,
+      scoreOut(col("__q")).as("modularity"))
+  }
+
+  /** The Louvain output over a community table (label, n_nodes, n_int,
+    * stot): the integral columns as longs, then `modularity`, the top
+    * `topK` communities by size. */
+  private def louvainOut(comm: DataFrame, topK: Int, modularity: Column*): DataFrame =
+    comm
+      .select(Seq(col("label").as("community"), col("n_nodes"),
         col("n_int").cast("long").as("n_internal"),
-        col("stot").cast("long").as("sigma_tot"),
-        scoreOut(col("__q")).as("modularity"))
+        col("stot").cast("long").as("sigma_tot")) ++ modularity: _*)
       .orderBy(col("n_nodes").desc, col("community"))
       .limit(topK)
-  }
 
   /** Multi-level Louvain (Blondel '08 §2, the aggregation phase): run
     * the one-level semi-synchronous sweep, CONTRACT each community to a
@@ -585,7 +803,8 @@ object GraphOps {
     * driver-collect convention), making Q(level 2) ≥ Q(level 1) a
     * guarantee rather than a hope. The contracted graph is
     * community-sized — the level-2 sweep costs a vanishing fraction of
-    * level 1 at scale.
+    * level 1 at scale. Up to [[LocalEdgeLimit]] canonical edges both
+    * levels run on the driver ([[louvainLocal]]).
     *
     * Returns the `topK` level-2 communities by ORIGINAL-node count:
     * (community, n_nodes, n_internal, sigma_tot, modularity_l1,
@@ -594,8 +813,18 @@ object GraphOps {
                         rounds: Int, topK: Int, scoreOut: Column => Column,
                         reliableEvery: Int = 0): DataFrame = {
     require(rounds >= 1 && rounds <= 10, s"1 <= rounds <= 10, got $rounds")
-    val spark = edges.sparkSession
     val canon = canonEdges(edges, aCol, bCol).persist()
+    onDriver(canon)(rows =>
+        louvainLocal(canon, rows, rounds, topK, scoreOut, multiLevel = true))
+      .getOrElse(louvainMultiLevelDistributed(canon, rounds, topK, scoreOut,
+        reliableEvery))
+  }
+
+  /** [[louvainMultiLevel]]'s distributed body over the persisted canonical
+    * edge table `canon` (u < v). */
+  private[graft] def louvainMultiLevelDistributed(canon: DataFrame, rounds: Int,
+      topK: Int, scoreOut: Column => Column, reliableEvery: Int): DataFrame = {
+    val spark = canon.sparkSession
     val (l1u, bcast) = louvainSweepW(canon.withColumn("w", lit(1.0)), rounds,
       scoreOut, reliableEvery, roundOffset = 0)
     val l1 = l1u.persist()
@@ -632,13 +861,11 @@ object GraphOps {
           (r.get(0), r.get(1), r.getDouble(2)))
         val moved = seqLocalMoving(triples, rounds)
         val labType = l1.schema("label").dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", labType),
-          org.apache.spark.sql.types.StructField("label", labType)))
+        val schema = StructType(Seq(StructField("node", labType),
+          StructField("label", labType)))
         spark.createDataFrame(
           spark.sparkContext.parallelize(
-            moved.toSeq.map { case (a, b) =>
-              org.apache.spark.sql.Row(a, b) }, 1),
+            moved.toSeq.map { case (a, b) => Row(a, b) }, 1),
           schema)
       } else
         louvainSweepW(superE, rounds, scoreOut, reliableEvery,
@@ -664,14 +891,151 @@ object GraphOps {
     val (commF, qF) =
       if (q2 + 1e-12 >= q1) (comm2, q2)
       else communitySummary(canon, l1, bcast)._1 -> q1
-    commF
-      .select(col("label").as("community"), col("n_nodes"),
-        col("n_int").cast("long").as("n_internal"),
-        col("stot").cast("long").as("sigma_tot"),
-        scoreOut(lit(q1)).as("modularity_l1"),
-        scoreOut(lit(qF)).as("modularity_l2"))
-      .orderBy(col("n_nodes").desc, col("community"))
-      .limit(topK)
+    louvainOut(commF, topK, scoreOut(lit(q1)).as("modularity_l1"),
+      scoreOut(lit(qF)).as("modularity_l2"))
+  }
+
+  /** [[louvainOneLevel]] (`multiLevel = false`) or [[louvainMultiLevel]]
+    * on the driver over the collected canonical edges: level 1 is
+    * [[louvainSweepLocal]]; level 2 contracts the level-1 communities into
+    * (least, greatest) super-edges weighted by multiplicity and runs
+    * [[seqLocalMoving]] on them (up to `SeqEdgeLimit`, else the sweep
+    * again with `roundOffset = rounds`); [[communityLocal]] summarizes;
+    * the keep-best rule is the distributed body's. None (distributed
+    * body) when the ids are not integral (the parity class is id % 2),
+    * `scoreOut` does not return a double, or there is no edge. */
+  private def louvainLocal(canon: DataFrame, rows: Array[Row], rounds: Int,
+      topK: Int, scoreOut: Column => Column, multiLevel: Boolean): Option[DataFrame] = {
+    val spark = canon.sparkSession
+    val node = canon.schema("u")
+    val (scoreT, score) = LocalGraph.scalar(spark, scoreOut)
+    val integral = node.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    if (!integral || scoreT != DoubleType || rows.isEmpty) None
+    else {
+      val g = LocalGraph(rows, node.dataType)
+      val l1 = louvainSweepLocal(g, Array.fill(g.m)(1.0), rounds, 0, score)
+      val (c1, q1) = communityLocal(g, l1)
+      // (communities, modularity columns, whether the label column is
+      // nullable: the distributed level-2 relabeling from seqLocalMoving
+      // is a nullable column)
+      val (comm, mods, nullLabel) =
+        if (!multiLevel) (c1.map(c => Row(c.toSeq :+ q1: _*)),
+          Seq(scoreOut(col("__q")).as("modularity")), node.nullable)
+        else {
+          val superW = scala.collection.mutable.HashMap.empty[(Int, Int), Double]
+          for (k <- 0 until g.m) {
+            val (a, b) = (l1(g.src(k)), l1(g.dst(k)))
+            superW.updateWith((math.min(a, b), math.max(a, b)))(
+              w => Some(w.getOrElse(0.0) + 1.0))
+          }
+          val triples = superW.toArray.map { case ((a, b), w) =>
+            (g.ids(a), g.ids(b), w) }
+          val seq = triples.length <= SeqEdgeLimit
+          val l2: Any => Any =
+            if (seq) seqLocalMoving(triples, rounds)
+            else {
+              val sg = LocalGraph(triples.map { case (a, b, _) => Row(a, b) },
+                node.dataType)
+              val sl = louvainSweepLocal(sg, triples.map(_._3), rounds, rounds, score)
+              id => sg.ids(sl(sg.indexOf(id)))
+            }
+          val (c2, q2) = communityLocal(g,
+            l1.map(c => g.indexOf(l2(g.ids(c)))))
+          val keep2 = q2 + 1e-12 >= q1
+          val (cF, qF) = if (keep2) (c2, q2) else (c1, q1)
+          (cF, Seq(scoreOut(lit(q1)).as("modularity_l1"),
+            scoreOut(lit(qF)).as("modularity_l2")),
+            node.nullable || (keep2 && seq))
+        }
+      val schema = StructType(Seq(node.copy(name = "label", nullable = nullLabel),
+          StructField("n_nodes", LongType, nullable = false),
+          StructField("n_int", DoubleType, nullable = false),
+          StructField("stot", DoubleType)) ++
+        (if (multiLevel) Nil else Seq(StructField("__q", DoubleType))))
+      Some(louvainOut(LocalGraph.frame(spark,
+        comm.map(r => Row(g.ids(r.getInt(0)) +: r.toSeq.tail: _*)), schema),
+        topK, mods: _*))
+    }
+  }
+
+  /** [[louvainSweepW]] on the driver over `g` with edge weights `w`
+    * (canonical, self-loops allowed): the same parity classes (id % 2
+    * against the round's parity, rounds `roundOffset + 1` to
+    * `roundOffset + rounds`), candidates (neighbor communities and the
+    * current one), gain `kic - deg * stotAdj / (2.0 * m)` through `score`
+    * ([[LocalGraph.scalar]] of scoreOut), and tiebreak (highest score,
+    * nulls last, then smallest label). Every weight is integral, so kic,
+    * deg, Σ_tot and m are exact whatever the summation order. Returns
+    * each node's label index. */
+  private def louvainSweepLocal(g: LocalGraph, w: Array[Double], rounds: Int,
+                                roundOffset: Int, score: Double => Any): Array[Int] = {
+    val (off, to, edge) = g.csr(both = true)
+    val wd = new Array[Double](g.n)
+    val wl = new Array[Double](g.n)
+    for (k <- 0 until g.m) {
+      if (g.src(k) == g.dst(k)) wl(g.src(k)) += w(k)
+      else { wd(g.src(k)) += w(k); wd(g.dst(k)) += w(k) }
+    }
+    val deg = Array.tabulate(g.n)(i => wd(i) + 2.0 * wl(i))
+    val m2 = 2.0 * w.sum
+    val parity = g.ids.map(id => Math.floorMod(id.asInstanceOf[Number].longValue, 2L))
+    // Spark's descending double order: nulls last, NaN first, 0.0 == -0.0
+    def cmp(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: Double, y: Double) => if (x == y) 0 else java.lang.Double.compare(x, y)
+    }
+    val kic = new Array[Double](g.n)
+    (roundOffset + 1 to roundOffset + rounds).foldLeft(Array.range(0, g.n)) { (lab, r) =>
+      val stot = new Array[Double](g.n)
+      for (i <- 0 until g.n) stot(lab(i)) += deg(i)
+      Array.tabulate(g.n) { i =>
+        if (parity(i) != r % 2) lab(i)
+        else {
+          // neighbor communities (self-loops are no neighbor)
+          val nbs = (off(i) until off(i + 1)).filter(to(_) != i)
+          nbs.foreach(j => kic(lab(to(j))) += w(edge(j)))
+          val cur = lab(i)
+          def gain(c: Int): Any = score(kic(c) - deg(i) *
+            (stot(c) - (if (c == cur) deg(i) else 0.0)) / m2)
+          var best = cur
+          var bestS = gain(cur)
+          for (j <- nbs) {
+            val c = lab(to(j))
+            val s = gain(c)
+            val o = cmp(s, bestS)
+            if (o > 0 || (o == 0 && c < best)) { best = c; bestS = s }
+          }
+          nbs.foreach(j => kic(lab(to(j))) = 0.0)
+          best
+        }
+      }
+    }
+  }
+
+  /** [[communitySummary]] on the driver for `label` (a label index per
+    * node of `g`, the unweighted canonical edges): one Row(label index,
+    * n_nodes, n_int, stot) per community, and the partition's modularity
+    * summed over the communities in label order. */
+  private def communityLocal(g: LocalGraph, label: Array[Int]): (Seq[Row], Double) = {
+    val deg = new Array[Double](g.n)
+    val nNodes = new Array[Long](g.n)
+    val nInt = new Array[Double](g.n)
+    val stot = new Array[Double](g.n)
+    for (k <- 0 until g.m) {
+      deg(g.src(k)) += 1.0; deg(g.dst(k)) += 1.0
+      if (label(g.src(k)) == label(g.dst(k))) nInt(label(g.src(k))) += 1.0
+    }
+    for (i <- 0 until g.n) { nNodes(label(i)) += 1; stot(label(i)) += deg(i) }
+    val m = g.m.toDouble
+    val comm = (0 until g.n).filter(nNodes(_) > 0)
+    val q = comm.map(c => nInt(c) / m -
+      (stot(c) / (2.0 * m)) * (stot(c) / (2.0 * m))).sum
+    (comm.map(c => Row(c, nNodes(c), nInt(c), stot(c))), q)
   }
 
   /** Blondel's sequential local-moving pass over a collected WEIGHTED
@@ -790,7 +1154,7 @@ object GraphOps {
   }
 
   /** Canonical undirected edge set: u < v, loops dropped, deduped. */
-  private def canonEdges(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+  private[graft] def canonEdges(edges: DataFrame, aCol: String, bCol: String): DataFrame =
     edges.select(
         least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
@@ -1030,18 +1394,63 @@ object GraphOps {
     * node keeps degree ≥ k, by the standard iterative peel — drop
     * sub-k nodes, recompute degrees on the induced subgraph, repeat to
     * fixpoint (Seidman '83; convergence ≤ #nodes rounds, in practice a
-    * handful). Each round is one degree aggregate + two semi-joins, all
-    * keyed on node ids; surviving-edge state is [[Ckpt.step]]-
-    * materialized per round (the Pregel discipline — and the same
-    * `reliableEvery` fault contract). The per-round `count()` on the
-    * node-sized degree table is the fixpoint test — one scalar job per
-    * round, the honest cost of a data-dependent loop.
+    * handful), at most `maxRounds` rounds. Up to [[LocalEdgeLimit]]
+    * canonical edges the peel runs on the driver ([[kCoreLocal]]). Above
+    * it ([[kCoreDistributed]]) each round is one degree aggregate + two
+    * semi-joins, all keyed on node ids; surviving-edge state is
+    * [[Ckpt.step]]-materialized per round (the Pregel discipline — and
+    * the same `reliableEvery` fault contract). The per-round `count()` on
+    * the node-sized degree table is the fixpoint test — one scalar job
+    * per round, the honest cost of a data-dependent loop.
     *
     * Returns the surviving (node, degree) — degree within the core. */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
             maxRounds: Int = 50, reliableEvery: Int = 0): DataFrame = {
     require(k >= 1, s"k >= 1, got $k")
-    var e = canonEdges(edges, aCol, bCol).localCheckpoint()
+    val canon = canonEdges(edges, aCol, bCol).persist()
+    onDriver(canon)(rows => Some(kCoreLocal(canon, rows, k, maxRounds)))
+      .getOrElse(kCoreDistributed(canon, k, maxRounds, reliableEvery))
+  }
+
+  /** [[kCore]]'s peel on the driver over the collected canonical edges,
+    * round-synchronous like the distributed body: a round keeps the
+    * nodes of degree ≥ k, stops when that count repeats or is zero, and
+    * otherwise drops every edge with an endpoint outside the kept set. */
+  private def kCoreLocal(canon: DataFrame, rows: Array[Row], k: Int,
+                         maxRounds: Int): DataFrame = {
+    val node = nodeField(canon, "u", "v")
+    val g = LocalGraph(rows, node.dataType)
+    val alive = Array.fill(g.m)(true)
+    def degrees: Array[Long] = {
+      val d = new Array[Long](g.n)
+      for (e <- 0 until g.m if alive(e)) { d(g.src(e)) += 1; d(g.dst(e)) += 1 }
+      d
+    }
+    var deg = degrees
+    var keepCount = -1L
+    var round = 1
+    var done = false
+    while (round <= maxRounds && !done) {
+      val n = deg.count(_ >= k).toLong
+      if (n == keepCount || n == 0) done = true
+      else {
+        keepCount = n
+        val d = deg
+        for (e <- 0 until g.m) alive(e) &&= d(g.src(e)) >= k && d(g.dst(e)) >= k
+        deg = degrees
+      }
+      round += 1
+    }
+    LocalGraph.frame(canon.sparkSession,
+      g.ids.indices.filter(deg(_) >= k).map(i => Row(g.ids(i), deg(i))),
+      StructType(Seq(node, StructField("degree", LongType, nullable = false))))
+  }
+
+  /** [[kCore]]'s distributed body over the persisted canonical edge table
+    * `canon` (u < v). */
+  private[graft] def kCoreDistributed(canon: DataFrame, k: Int, maxRounds: Int,
+                                      reliableEvery: Int): DataFrame = {
+    var e = canon
     var keepCount = -1L
     var round = 1
     var deg = e.select(col("u").as("node"))

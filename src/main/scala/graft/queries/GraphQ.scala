@@ -238,9 +238,10 @@ object GraphQ {
     // type, weight = transition count): hub = "what funnels flow",
     // authority = "what flow lands on" — the directional decomposition
     // PageRank's single score can't express. The node universe is the
-    // event-type vocabulary, so the vector-broadcast hint skips the
-    // probe job (the q233 convention). Oracle: the mutual-reinforcement
-    // recursion unrolled as one CTE pair per iteration.
+    // event-type vocabulary, so the merged edge list is bounded by its
+    // square and the steps run on the driver (the driver-local regime).
+    // Oracle: the mutual-reinforcement recursion unrolled as one CTE
+    // pair per iteration.
     "q306_hits" -> Q(
       (s, d) => {
         val edges = graft.operators.EventOps.markovTransitions(
@@ -248,7 +249,7 @@ object GraphQ {
             scoreOut = identity)
           .select(col("cur_state"), col("next_state"), col("n"))
         graft.operators.GraphOps.hits(edges, "cur_state", "next_state", "n",
-            iters = 4, scoreOut = dec6, broadcastVec = Some(true))
+            iters = 4, scoreOut = dec6)
           .orderBy("node")
       },
       Some {
@@ -464,8 +465,8 @@ object GraphQ {
   /** The q246 co-activity graph: users active in the same (hour, type,
     * k-decile) bucket form an undirected edge — shared by the triangle
     * census, Adamic-Adar and k-core entries. */
-  private def coActivityEdges(s: org.apache.spark.sql.SparkSession,
-                              d: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def coActivityEdges(s: org.apache.spark.sql.SparkSession,
+                                     d: String): org.apache.spark.sql.DataFrame = {
     // spread the single-row-group scan BEFORE the per-row JSON parse:
     // unspread, date_trunc + get_json_object + the distinct's partial
     // agg run single-task (profiled 1.5 s of every census/community

@@ -417,14 +417,11 @@ object Relational {
 
     // Weighted PageRank over the nation-level trade graph (customer
     // nation → supplier nation, edge weight = extended price): 5
-    // materialized power-iteration supersteps (GraphOps.pageRank) — the
+    // power-iteration supersteps (GraphOps.pageRank) — the
     // iterative-graph-algorithm family (importance propagation) on
-    // DataFrames. The rank vector is node-sized; the big join pipeline
-    // is touched exactly once to build the persisted edge list. Bench
-    // note: ~4.5 s at sf0.1 is iters × the local-mode job-scheduling
-    // floor (each superstep is one materializing job by design), NOT a
-    // data-volume cost — at cluster scale the same 11 jobs amortize over
-    // arbitrarily large edge tables with one shuffle each.
+    // DataFrames. The big join pipeline is touched exactly once, by the
+    // job that collects the merged edge list (at most 25² edges), and
+    // the supersteps run on the driver (the driver-local regime).
     "q233_trade_pagerank" -> Q(
       (s, d) => {
         val nc = Tables.nation(s, d)
@@ -441,13 +438,8 @@ object Relational {
           .join(broadcast(nc), col("c_nationkey") === col("__ck"))
           .join(broadcast(ns), col("s_nationkey") === col("__sk"))
           .select(col("src_nation"), col("dst_nation"), col("l_extendedprice"))
-        // caller hint: the node universe IS the nation vocabulary (≤ 25
-        // rows) — broadcast regime known at authoring time, so the probe
-        // aggregate job is skipped entirely (GraphOpsSpec pins the job
-        // count)
         graft.operators.GraphOps.pageRank(edges, "src_nation", "dst_nation",
-            "l_extendedprice", damping = 0.85, iters = 5, scoreOut = dec6,
-            broadcastRank = Some(true))
+            "l_extendedprice", damping = 0.85, iters = 5, scoreOut = dec6)
           .orderBy("node")
       },
       Some(s"""WITH e AS (SELECT cn.n_name AS src, sn.n_name AS dst,

@@ -608,10 +608,11 @@ object TokenizerQ {
     // the word co-occurrence graph (window = 3 raw-split positions,
     // words >= 3 letters, both directions), top-20 by rank — keyword
     // scoring as a pure COMPOSITION of the tokenizer and GraphOps
-    // .pageRank (auto regime: the node universe is the vocabulary, so
-    // one probe aggregate picks the broadcast path until Heaps-law
-    // growth crosses the limit). The oracle unrolls the same 5 power
-    // steps (the q233 pattern) over the same tokenization.
+    // .pageRank (the co-occurrence graph's merged edges stay under
+    // GraphOps.LocalEdgeLimit at gate scale, so the power steps run on
+    // the driver; a corpus whose word graph outgrows the bound takes the
+    // distributed regimes). The oracle unrolls the same 5 power steps
+    // (the q233 pattern) over the same tokenization.
     "q327_textrank" -> Q(
       (s, d) => {
         // spread before the tokenize explode: the co-occurrence self-join

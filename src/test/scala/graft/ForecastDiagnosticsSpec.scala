@@ -56,9 +56,10 @@ class ForecastDiagnosticsSpec extends SparkSpec {
   test("hits: partitioned-vector regime matches the broadcast regime") {
     val e = Seq(("a", "b", 3.0), ("b", "c", 1.0), ("c", "a", 2.0),
         ("a", "c", 1.0)).toDF("src", "dst", "w")
-    def run(hint: Option[Boolean]) =
-      GraphOps.hits(e, "src", "dst", "w", iters = 3, scoreOut = dec6,
-          broadcastVec = hint)
+    // the distributed body: 4 edges would take the driver-local regime
+    def run(bcast: Option[Boolean]) =
+      GraphOps.hitsDistributed(GraphOps.mergedEdges(e, "src", "dst", "w"),
+          iters = 3, scoreOut = dec6, reliableEvery = 0, bcast = bcast)
         .orderBy("node").collect().map(r =>
           (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
     assert(run(Some(true)) == run(Some(false)))

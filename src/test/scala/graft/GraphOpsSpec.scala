@@ -64,9 +64,11 @@ class GraphOpsSpec extends SparkSpec {
     val e = Seq(("a", "b", 1.0), ("b", "a", 1.0), ("a", "c", 1.0),
         ("c", "d", 2.0), ("d", "a", 1.0))
       .toDF("src", "dst", "w")
-    def run(hint: Option[Boolean]) = GraphOps.pageRank(e, "src", "dst", "w",
-        damping = 0.85, iters = 4, scoreOut = identity,
-        broadcastRank = hint)
+    // the distributed body: 5 edges would take the driver-local regime
+    def run(bcast: Option[Boolean]) = GraphOps.pageRankDistributed(
+        GraphOps.mergedEdges(e, "src", "dst", "w"),
+        damping = 0.85, iters = 4, scoreOut = identity, reliableEvery = 0,
+        bcast = bcast)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val fast = run(None)         // 4 nodes ≤ NodeLimit → broadcast path
     val scale = run(Some(false)) // forces the partitioned-rank path
@@ -192,40 +194,17 @@ class GraphOpsSpec extends SparkSpec {
     assert(trunc == Set(1L, 2L, 4L))
   }
 
-  test("broadcastRank hint: identical ranks, strictly fewer jobs") {
-    val e = Seq(("a", "b", 1.0), ("b", "a", 1.0), ("a", "c", 1.0),
-        ("c", "d", 2.0), ("d", "a", 1.0))
-      .toDF("src", "dst", "w")
-    var auto: Map[String, Double] = null
-    var hinted: Map[String, Double] = null
-    val jAuto = jobsIn("pr-auto") {
-      auto = GraphOps.pageRank(e, "src", "dst", "w",
-          damping = 0.85, iters = 3, scoreOut = identity)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    }
-    val jHint = jobsIn("pr-hint") {
-      hinted = GraphOps.pageRank(e, "src", "dst", "w",
-          damping = 0.85, iters = 3, scoreOut = identity,
-          broadcastRank = Some(true))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    }
-    assert(auto.keySet == hinted.keySet)
-    auto.foreach { case (n, r) =>
-      assert(math.abs(r - hinted(n)) < 1e-12, s"$n: $r vs ${hinted(n)}")
-    }
-    // the hint skips the regime-probe aggregate job (VERDICT r9 note 3)
-    assert(jHint < jAuto, s"hinted run must schedule fewer jobs: $jHint vs $jAuto")
-  }
-
   test("reliableEvery: durable supersteps, same fixpoint as the default") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val e = Seq(("a", "b", 1.0), ("b", "a", 1.0), ("a", "c", 1.0),
         ("c", "d", 2.0), ("d", "a", 1.0))
       .toDF("src", "dst", "w")
-    def run(every: Int) = GraphOps.pageRank(e, "src", "dst", "w",
-        damping = 0.85, iters = 4, scoreOut = identity,
-        reliableEvery = every)
+    // the distributed bodies: the driver-local regime has no supersteps
+    // to checkpoint
+    def run(every: Int) = GraphOps.pageRankDistributed(
+        GraphOps.mergedEdges(e, "src", "dst", "w"),
+        damping = 0.85, iters = 4, scoreOut = identity, reliableEvery = every)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val local = run(0)
     val durable = run(2) // supersteps 2 and 4 hit the reliable path
@@ -239,11 +218,12 @@ class GraphOpsSpec extends SparkSpec {
     assert(wrote >= 2, s"expected >=2 durable rdd snapshots under $dir, got $wrote")
     // BFS rides the same policy
     val be = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("s", "d")
-    val bLocal = GraphOps.bfsHops(be, "s", "d", Seq(1L), maxHops = 5)
+    def bfs(every: Int) = GraphOps.bfsDistributed(
+        GraphOps.bfsEdges(be, "s", "d", directed = false), Seq(1L),
+        maxHops = 5, reliableEvery = every)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bDur = GraphOps.bfsHops(be, "s", "d", Seq(1L), maxHops = 5,
-        reliableEvery = 1)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val bLocal = bfs(0)
+    val bDur = bfs(1)
     assert(bLocal == bDur, s"$bLocal vs $bDur")
   }
 
