@@ -16,8 +16,10 @@ import org.apache.spark.sql.types._
   * Three physical regimes for the superstep operators (pageRank, hits,
   * bfsHops, kCore, labelPropagation, the Louvain sweep), picked per call:
   *  - DRIVER-LOCAL: the operator builds and persists its merged edge
-  *    table, and one job collects at most [[LocalEdgeLimit]] + 1 of its
-  *    rows. At or below the bound the supersteps run on the driver over a
+  *    table, and one job counts it and collects it when it has at most
+  *    [[LocalEdgeLimit]] rows ([[LocalGraph.collectAtMost]]: about the
+  *    bound's worth of rows ships at most, whatever the table's size).
+  *    At or below the bound the supersteps run on the driver over a
   *    [[LocalGraph]] (dense node index, CSR adjacency) with the same
   *    semantics, and the result returns as a LocalRelation: no superstep,
   *    probe or checkpoint job, and none at all until the result is
@@ -41,9 +43,16 @@ object GraphOps {
 
   /** Driver-local regime bound: a merged edge table of at most this many
     * rows is collected and iterated on the driver. 2^22, the
-    * [[DedupOps.nearDupClusters]] gate: a few tens of MB of edge arrays,
-    * far inside a driver heap. A graph over a vocabulary of V nodes has at
-    * most V² merged edges, so vocabulary-sized graphs always land here. */
+    * [[DedupOps.nearDupClusters]] gate. The table arrives as Rows of boxed
+    * values: about 50 bytes per integral-id edge serialized (a long pair,
+    * measured in `LocalRegimeSpec`) and about 100 on the driver heap, so a
+    * few hundred MB at the bound, within the default 1 GB
+    * `spark.driver.maxResultSize`; string ids add their length. The
+    * supersteps' index arrays add a few tens of MB. A table above the
+    * bound ships at most about the bound's worth of rows before the gate
+    * rejects it ([[LocalGraph.collectAtMost]]). A graph over a vocabulary
+    * of V nodes has at most V² merged edges, so vocabulary-sized graphs
+    * always land here. */
   val LocalEdgeLimit: Long = 1L << 22
 
   /** Broadcast-regime bound: node-sized state of at most this many nodes
@@ -60,8 +69,9 @@ object GraphOps {
 
   /** The driver-local regime's gate over a persisted edge table `e` whose
     * columns 0 and 1 are the endpoint ids: `run`'s result when `e` has at
-    * most [[LocalEdgeLimit]] rows (one job, which otherwise fills `e`'s
-    * cache for the distributed body), the ids are non-null and of one
+    * most [[LocalEdgeLimit]] rows (one job, which also fills `e`'s cache
+    * for the distributed body; see [[LocalGraph.collectAtMost]] for what
+    * it ships), the ids are non-null and of one
     * [[LocalGraph.supports]]ed type, and `run` mirrors the case (it
     * returns None for inputs whose distributed semantics it does not
     * replay, e.g. a division by zero). `e` is released when the local
@@ -176,8 +186,10 @@ object GraphOps {
     }
 
   /** [[pageRank]]'s distributed body over the persisted merged edge table
-    * `e` (src, dst, w). `bcast` picks the path; None probes |nodes|
-    * against [[NodeLimit]] (the count is needed as N either way). */
+    * `e` (src, dst, w). `bcast` picks the path; None, what [[pageRank]]
+    * passes, probes |nodes| against [[NodeLimit]] (the count is needed as
+    * N either way). Only specs set it, to reach the scale path on small
+    * graphs. */
   private[graft] def pageRankDistributed(e: DataFrame, damping: Double,
       iters: Int, scoreOut: Column => Column, reliableEvery: Int,
       bcast: Option[Boolean] = None): DataFrame = {
@@ -548,8 +560,8 @@ object GraphOps {
     }
 
   /** [[hits]]'s distributed body over the persisted merged edge table `e`
-    * (src, dst, w). `bcast` picks the regime; None probes |nodes| against
-    * [[NodeLimit]]. */
+    * (src, dst, w). `bcast` picks the regime; None, what [[hits]] passes,
+    * probes |nodes| against [[NodeLimit]]. Only specs set it. */
   private[graft] def hitsDistributed(e: DataFrame, iters: Int,
       scoreOut: Column => Column, reliableEvery: Int,
       bcast: Option[Boolean] = None): DataFrame = {
@@ -970,7 +982,7 @@ object GraphOps {
     * nulls last, then smallest label). Every weight is integral, so kic,
     * deg, Σ_tot and m are exact whatever the summation order. Returns
     * each node's label index. */
-  private def louvainSweepLocal(g: LocalGraph, w: Array[Double], rounds: Int,
+  private[graft] def louvainSweepLocal(g: LocalGraph, w: Array[Double], rounds: Int,
                                 roundOffset: Int, score: Double => Any): Array[Int] = {
     val (off, to, edge) = g.csr(both = true)
     val wd = new Array[Double](g.n)

@@ -57,20 +57,36 @@ private[graft] object LocalGraph {
     case _ => false
   }
 
-  /** The rows of `df` if it has at most `limit` of them, else None. One job:
-    * each partition returns at most `limit + 1` rows, and the driver stops
-    * keeping them once the total passes `limit`. */
+  /** The rows of `df` in partition order if it has at most `limit` of
+    * them, else None; at most `limit` + #partitions rows ever reach the
+    * driver. One job: every task counts its whole partition (filling
+    * `df`'s cache when it is persisted) and returns its rows only when
+    * they fit its share of the bound, `limit` / #partitions rounded up, so
+    * the counts reject an over-bound table after at most about `limit`
+    * rows have been shipped. When the total fits but a skewed partition
+    * overflowed its share, a second job fetches just those partitions. */
   def collectAtMost(df: DataFrame, limit: Long): Option[Array[Row]] = {
-    val take = math.min(limit + 1, Int.MaxValue.toLong).toInt
-    val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var over = false
-    df.sparkSession.sparkContext.runJob(df.rdd,
-      (it: Iterator[Row]) => it.take(take).toArray,
-      (_: Int, part: Array[Row]) => if (!over) {
-        kept ++= part
-        if (kept.length > limit) { over = true; kept.clear() }
-      })
-    if (over) None else Some(kept.toArray)
+    val rdd = df.rdd
+    val sc = df.sparkSession.sparkContext
+    val nParts = math.max(rdd.getNumPartitions, 1)
+    val share = (limit + nParts - 1) / nParts
+    val parts = sc.runJob(rdd, (it: Iterator[Row]) => {
+      var kept = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var n = 0L
+      it.foreach { r =>
+        n += 1
+        if (n <= share) kept += r else kept = null
+      }
+      (n, Option(kept).map(_.toArray))
+    })
+    if (parts.iterator.map(_._1).sum > limit) None
+    else {
+      val overflow = parts.indices.filter(parts(_)._2.isEmpty)
+      val fetched =
+        if (overflow.isEmpty) Map.empty[Int, Array[Row]]
+        else overflow.zip(sc.runJob(rdd, (it: Iterator[Row]) => it.toArray, overflow)).toMap
+      Some(parts.indices.toArray.flatMap(i => parts(i)._2.getOrElse(fetched(i))))
+    }
   }
 
   /** The graph over columns 0 and 1 of `rows` (non-null ids of type `dt`),

@@ -1,12 +1,16 @@
 package graft
 
-import graft.operators.{EventOps, GraphOps}
+import java.util.concurrent.atomic.AtomicLong
+import graft.operators.{EventOps, GraphOps, LocalGraph}
 import graft.queries.GraphQ
 import graft.sources.Tables
 import graft.queries.Q.dec6
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.SparkThrowable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Cross-validation of GraphOps' driver-local regime against the
   * distributed bodies, operator by operator: on the hand fixtures of
@@ -14,17 +18,22 @@ import org.apache.spark.sql.functions._
   * sf0.001 edge sets of the eight graph queries. The public call must
   * take the local regime (its plan reads only local relations); both
   * sides must have the same schema, identical integral and string
-  * values, and doubles within 1e-12 that are identical after dec6. */
+  * values, and doubles within 1e-12 that are identical after dec6. Also
+  * the regime gate itself ([[LocalGraph.collectAtMost]]), the public
+  * calls that fall back to the distributed bodies, and the weighted
+  * Louvain sweep of the multi-level operator's large level 2. */
 class LocalRegimeSpec extends SparkSpec {
   import spark.implicits._
 
   private def rnd6(x: Double): Double =
     math.floor(x * 1e6 + graft.queries.Q.BIAS) / 1e6
 
-  private def assertSame(what: String, local: DataFrame, dist: DataFrame): Unit = {
+  private def assertSame(what: String, local: DataFrame, dist: DataFrame,
+                         onDriver: Boolean = true): Unit = {
     val leaves = local.queryExecution.analyzed.collectLeaves()
-    assert(leaves.forall(_.isInstanceOf[LocalRelation]),
-      s"$what: not the driver-local regime:\n${local.queryExecution.analyzed}")
+    assert(leaves.forall(_.isInstanceOf[LocalRelation]) == onDriver,
+      s"$what: not the ${if (onDriver) "driver-local" else "distributed"} " +
+        s"regime:\n${local.queryExecution.analyzed}")
     assert(local.schema == dist.schema,
       s"$what: schema ${local.schema} vs ${dist.schema}")
     def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.map {
@@ -190,5 +199,134 @@ class LocalRegimeSpec extends SparkSpec {
     kCore("q323", coAct, "ua", "ub", 2)
     lpa("q330", coAct, "ua", "ub", 4)
     louvain("q337/q347", coAct, "ua", "ub", 4, 20, dec6)
+  }
+
+  /** The bytes the tasks of the jobs `f` runs send back to the driver
+    * (their serialized results), and those jobs' count. */
+  private def shipped(f: => Unit): (Long, Int) = {
+    val sc = spark.sparkContext
+    val group = s"shipped-${System.nanoTime}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val (bytes, tasks) = (new AtomicLong, new AtomicLong)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null) {
+          bytes.addAndGet(e.taskMetrics.resultSize); tasks.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val jobs = jobsIn(group)(f)
+      // the listener bus is asynchronous: wait until the tally settles
+      var prev = -1L
+      var spins = 0
+      while (tasks.get != prev && spins < 50) {
+        prev = tasks.get; Thread.sleep(100); spins += 1
+      }
+      (bytes.get, jobs)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("collectAtMost: an over-bound table is rejected without shipping it") {
+    // 64 partitions of 2,000 rows against a bound of 1,000: every
+    // partition is under the bound, the table is 128 times over it
+    val df = spark.range(0L, 128000L, 1L, 64)
+      .select(col("id"), (col("id") * 7).as("x")).persist()
+    var got: Option[Array[Row]] = Some(Array.empty)
+    val (gate, gateJobs) = shipped { got = LocalGraph.collectAtMost(df, 1000L) }
+    val (all, _) = shipped {
+      spark.sparkContext.runJob(df.rdd, (it: Iterator[Row]) => it.toArray)
+    }
+    assert(got.isEmpty)
+    assert(gateJobs == 1)
+    // one share (16 rows) per partition plus per-task overhead, against
+    // every row shipped the same way
+    assert(gate * 20 < all, s"the gate shipped $gate bytes, all rows $all")
+    info(s"the gate shipped $gate bytes, all rows $all (${all / 128000} per row)")
+    df.unpersist()
+  }
+
+  test("collectAtMost: under the bound every row comes back in partition order") {
+    val even = spark.range(0L, 1000L, 1L, 8).toDF("id")
+    var got: Option[Array[Row]] = None
+    val (_, evenJobs) = shipped { got = LocalGraph.collectAtMost(even, 1000L) }
+    assert(evenJobs == 1)
+    assert(got.map(_.map(_.getLong(0)).toSeq).contains(0L until 1000L))
+    assert(LocalGraph.collectAtMost(even, 999L).isEmpty)
+    // all rows in one of 8 (cached) partitions: over its share, so a
+    // second job fetches that partition alone
+    val skewed = spark.range(0L, 1000L, 1L, 8).toDF("id").repartition(8, lit(0)).persist()
+    assert(skewed.count() == 1000L)
+    val (_, skewJobs) = shipped { got = LocalGraph.collectAtMost(skewed, 1000L) }
+    assert(skewJobs == 2)
+    assert(got.map(_.map(_.getLong(0)).sorted.toSeq).contains(0L until 1000L))
+    skewed.unpersist()
+    assert(LocalGraph.collectAtMost(spark.range(0L).toDF("id"), 0L)
+      .exists(_.isEmpty))
+  }
+
+  test("inputs the local regime does not replay fall back to the distributed bodies") {
+    // a null endpoint id, a source whose out-weight is zero, a null weight
+    val nullId = Seq[(String, String, java.lang.Double)](("a", "b", 1.0),
+        ("b", "a", 1.0), (null, "c", 1.0), ("a", "c", 2.0))
+      .toDF("src", "dst", "w")
+    val zeroOut = Seq(("a", "b", 1.0), ("b", "a", 0.0), ("a", "c", 2.0))
+      .toDF("src", "dst", "w")
+    val nullW = Seq[(String, String, java.lang.Double)](("a", "b", 1.0),
+        ("b", "a", null), ("a", "c", 2.0))
+      .toDF("src", "dst", "w")
+    def pageRankDist(e: DataFrame) =
+      GraphOps.pageRankDistributed(GraphOps.mergedEdges(e, "src", "dst", "w"),
+        0.85, 4, dec6, reliableEvery = 0)
+    Seq("null id" -> nullId, "null weight" -> nullW).foreach { case (n, e) =>
+      assertSame(s"pageRank $n", GraphOps.pageRank(e, "src", "dst", "w", 0.85, 4, dec6),
+        pageRankDist(e), onDriver = false)
+    }
+    // the distributed body divides by the zero out-weight: the public
+    // call must raise the same error, not return driver-side numbers
+    val dist = intercept[ArithmeticException](pageRankDist(zeroOut).collect())
+    val pub = intercept[ArithmeticException](
+      GraphOps.pageRank(zeroOut, "src", "dst", "w", 0.85, 4, dec6).collect())
+    def condition(e: Throwable) = e.asInstanceOf[SparkThrowable].getCondition
+    assert(condition(pub) == "DIVIDE_BY_ZERO" && condition(dist) == "DIVIDE_BY_ZERO")
+    assertSame("hits null id", GraphOps.hits(nullId, "src", "dst", "w", 3, dec6),
+      GraphOps.hitsDistributed(GraphOps.mergedEdges(nullId, "src", "dst", "w"), 3,
+        dec6, reliableEvery = 0), onDriver = false)
+    // string ids: the local sweep takes parity classes from integral ids
+    // only (the distributed body casts each id to long)
+    val words = Seq(("1", "2"), ("2", "3"), ("1", "3"), ("3", "4")).toDF("a", "b")
+    assertSame("louvainOneLevel string ids",
+      GraphOps.louvainOneLevel(words, "a", "b", 3, 10, dec6),
+      GraphOps.louvainOneLevelDistributed(canon(words, "a", "b"), 3, 10, dec6,
+        reliableEvery = 0), onDriver = false)
+  }
+
+  test("weighted Louvain sweep with self-loops: driver and distributed agree") {
+    // the contracted-graph shape the large level 2 of louvainMultiLevel
+    // sweeps: canonical u <= v, integral weights, self-loops; 40 nodes,
+    // about one pair in six joined, every third node looped
+    val rnd = new scala.util.Random(7)
+    val pairs = for (u <- 1L to 40L; v <- u + 1 to 40L if rnd.nextInt(6) == 0)
+      yield (u, v, 1.0 + rnd.nextInt(4))
+    val loops = (3L to 40L by 3L).map(u => (u, u, 1.0 + rnd.nextInt(6)))
+    val canonW = (pairs ++ loops).toDF("u", "v", "w").persist()
+    val rows = canonW.collect()
+    val g = LocalGraph(rows, LongType)
+    for (out <- Seq[Column => Column](identity, dec6); offset <- Seq(1, 4);
+         rounds <- Seq(1, 4)) {
+      val (_, score) = LocalGraph.scalar(spark, out)
+      val lab = GraphOps.louvainSweepLocal(g, rows.map(_.getDouble(2)), rounds,
+        offset, score)
+      val local = g.ids.indices.map(i => g.ids(i) -> g.ids(lab(i))).toMap
+      val (dl, _) = GraphOps.louvainSweepW(canonW, rounds, out,
+        reliableEvery = 0, roundOffset = offset)
+      val dist = dl.collect().map(r => r.get(0) -> r.get(1)).toMap
+      assert(local == dist, s"offset $offset rounds $rounds: $local vs $dist")
+    }
+    canonW.unpersist()
   }
 }
