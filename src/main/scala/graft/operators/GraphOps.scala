@@ -613,8 +613,10 @@ object GraphOps {
   /** Adamic–Adar link prediction over an undirected edge list: for every
     * NON-adjacent pair (u, w) sharing at least one neighbor,
     * AA(u, w) = Σ_{v ∈ N(u)∩N(w)} 1/ln(deg v) — rare shared friends
-    * count more (Adamic & Adar '03). A shared neighbor has degree ≥ 2 by
-    * construction, so ln(deg) > 0 always.
+    * count more (Adamic & Adar '03). A shared neighbor has degree ≥ 2, so
+    * only such centers are kept, before their weight is projected: a
+    * degree-1 center has no pair, and its 1/ln(1) divides by zero (ANSI)
+    * wherever the plan evaluates the weight ahead of the u < w filter.
     *
     * Wedge enumeration at the shared neighbor costs Σ_v deg(v)² — unlike
     * [[triangleStats]] the degree-ordered orientation does NOT apply,
@@ -634,7 +636,8 @@ object GraphOps {
     val sym = symmetric(canon)
     val deg = sym.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
-    val centers = maxDegree.fold(deg)(cap => deg.filter(col("deg") <= cap))
+    val wedged = deg.filter(col("deg") >= 2)
+    val centers = maxDegree.fold(wedged)(cap => wedged.filter(col("deg") <= cap))
     // wedges keyed at the center v: (v, u) ⋈ (v, w), u < w — each
     // unordered pair scored once per shared neighbor
     val byCenter = sym.select(col("u").as("ctr"), col("v").as("leaf"))

@@ -6,9 +6,21 @@ import org.apache.spark.sql.functions._
 
 /** Window-feature combinators — the heart of the reference workload
   * (SURVEY §2.7). Every reference Numba kernel (`pre_processing.py:333-637,
-  * 996-1037`) reduces to compositions of built-in, codegen'd window
-  * aggregates; no UDFs anywhere, so the whole feature stage stays inside
-  * WholeStageCodegen and one sort per window ordering.
+  * 996-1037`) reduces to compositions of built-in window aggregates; no
+  * UDFs anywhere, and one sort per window ordering.
+  *
+  * Cost model: Spark does not code-generate `WindowExec`, and a sliding
+  * ROWS frame (`rowsBetween(-n, k)`) re-aggregates its whole frame for
+  * every row, so each window expression costs about its frame width in
+  * aggregate updates per row. Spark evaluates every window expression of
+  * a projection separately, even one equal to another, so a feature that
+  * inlines its aggregates pays for each copy. The trailing features here
+  * therefore return a [[Feature]]: the window aggregates it reads, each an
+  * [[Agg]] named after what it computes, and a plain expression over
+  * them. [[withFeatures]] binds every distinct aggregate once, in one
+  * projection, and evaluates the features over those columns: rolling
+  * mean and std over one frame share one `count`, and the z-score
+  * detector's mean and std feed its flag, drop % and outputs.
   *
   * Scale note: all entry points take a caller-supplied [[WindowSpec]]; at
   * 100 TB the series MUST be partitioned (`Window.partitionBy(seriesKey)
@@ -18,76 +30,111 @@ import org.apache.spark.sql.functions._
   */
 object WindowOps {
 
-  /** Trailing row frame of the last `n` rows including the current one. */
-  def trailing(w: WindowSpec, n: Int): WindowSpec = w.rowsBetween(-(n - 1L), 0L)
+  /** A window aggregate to bind as the column `name`. The name spells out
+    * the function, input column and frame, so equal aggregates get equal
+    * names and [[withFeatures]] binds them once. Names are unique within
+    * one window ordering only: bind the aggregates of one [[WindowSpec]]
+    * per [[withFeatures]] call. */
+  final case class Agg(name: String, over: Column) {
+    def ref: Column = col(s"`$name`")
+  }
+
+  /** A feature: `value` is a plain (window-free) expression over the bound
+    * columns of `aggs` and the input's own columns. */
+  final case class Feature(aggs: Seq[Agg], value: Column) {
+    def map(f: Column => Column): Feature = Feature(aggs, f(value))
+  }
+
+  /** Appends each named feature as a column. Every distinct aggregate the
+    * features read is evaluated once, in one projection (one window
+    * operator per ordering), then the features are computed over those
+    * columns, which the result drops. Feature names must be new to `df`. */
+  def withFeatures(df: DataFrame, features: (String, Feature)*): DataFrame = {
+    val aggs = features.flatMap(_._2.aggs).distinctBy(_.name)
+    df.select(col("*") +: aggs.map(a => a.over.as(a.name)): _*)
+      .select(df.columns.map(c => col(s"`$c`")).toIndexedSeq ++
+        features.map { case (n, f) => f.value.as(n) }: _*)
+  }
+
+  /** `fn` of column `c` over the rows [lo, hi] relative to the current one. */
+  private def frameAgg(fn: String, agg: Column => Column, c: String, lo: Long, hi: Long,
+                       w: WindowSpec): Agg =
+    Agg(s"__${fn}_${c}_${lo}_$hi".replace('-', 'm'), agg(col(c)).over(w.rowsBetween(lo, hi)))
+
+  /** `c` at `k` rows before the current one. */
+  private def lagAgg(c: String, k: Int, w: WindowSpec): Agg =
+    Agg(s"__lag${k}_$c", lag(col(c), k).over(w))
 
   /** Lag feature `x[t-k]` (reference `create_lag`, `pre_processing.py:333-347`).
     * Exact match to the pandas shift because the aligned grid is regular. */
-  def lagF(c: Column, k: Int, w: WindowSpec): Column = lag(c, k).over(w)
+  def lagF(c: String, k: Int, w: WindowSpec): Feature = {
+    val l = lagAgg(c, k, w); Feature(Seq(l), l.ref)
+  }
 
-  /** `min_periods` guard (reference `pre_processing.py:1173,1190,1240`):
-    * emit the aggregate only when at least `minPeriods` non-null rows are in
+  /** `agg` over the last `n` rows, the current one included, with the
+    * `min_periods` guard (reference `pre_processing.py:1173,1190,1240`):
+    * the aggregate only when at least `minPeriods` non-null rows are in
     * the frame, else null — pandas `rolling(..., min_periods=p)` semantics. */
-  private def withMinPeriods(agg: Column, c: Column, f: WindowSpec, minPeriods: Int): Column =
-    when(count(c).over(f) >= minPeriods, agg).otherwise(lit(null))
+  private def rolling(fn: String, agg: Column => Column, c: String, n: Int, minPeriods: Int,
+                      w: WindowSpec): Feature = {
+    val cnt = frameAgg("count", count, c, 1L - n, 0L, w)
+    val a = frameAgg(fn, agg, c, 1L - n, 0L, w)
+    Feature(Seq(cnt, a), when(cnt.ref >= minPeriods, a.ref).otherwise(lit(null)))
+  }
 
   /** Rolling mean over last `n` rows (`rolling_mean_jit`, `pre_processing.py:520-550`). */
-  def rollAvg(c: Column, n: Int, minPeriods: Int, w: WindowSpec): Column = {
-    val f = trailing(w, n); withMinPeriods(avg(c).over(f), c, f, minPeriods)
-  }
+  def rollAvg(c: String, n: Int, minPeriods: Int, w: WindowSpec): Feature =
+    rolling("avg", avg, c, n, minPeriods, w)
 
   /** Rolling *population* std — the reference divides by `count`
     * (`pre_processing.py:583`), so `stddev_pop`, not Spark's default sample
     * stddev (SURVEY §2.7 W3 footnote). */
-  def rollStdPop(c: Column, n: Int, minPeriods: Int, w: WindowSpec): Column = {
-    val f = trailing(w, n); withMinPeriods(stddev_pop(c).over(f), c, f, minPeriods)
-  }
+  def rollStdPop(c: String, n: Int, minPeriods: Int, w: WindowSpec): Feature =
+    rolling("stdpop", stddev_pop, c, n, minPeriods, w)
 
   /** Rolling sample std (pandas `rolling().std()` default ddof=1,
     * `simple_pre_processing.py:890`). */
-  def rollStdSamp(c: Column, n: Int, minPeriods: Int, w: WindowSpec): Column = {
-    val f = trailing(w, n); withMinPeriods(stddev_samp(c).over(f), c, f, minPeriods)
-  }
+  def rollStdSamp(c: String, n: Int, minPeriods: Int, w: WindowSpec): Feature =
+    rolling("stdsamp", stddev_samp, c, n, minPeriods, w)
 
   /** Rolling median — the robust-statistics window the mean/std family
     * lacks (pandas `rolling().median()`): an exact interpolated percentile
     * over the trailing frame. O(n log n) per frame via the aggregate's
     * internal sort; at 100 TB widths stay small (24-168 rows) and the
     * window is series-partitioned, so the cost is per-row-bounded. */
-  def rollMedian(c: Column, n: Int, minPeriods: Int, w: WindowSpec): Column = {
-    val f = trailing(w, n)
+  def rollMedian(c: String, n: Int, minPeriods: Int, w: WindowSpec): Feature =
     // percentile, not median(): median is frame-restricted in Spark 4
-    withMinPeriods(percentile(c, lit(0.5)).over(f), c, f, minPeriods)
-  }
+    rolling("median", x => percentile(x, lit(0.5)), c, n, minPeriods, w)
 
   /** Rolling min/max (`rolling_min_jit`/`rolling_max_jit`, `pre_processing.py:587-637`). */
-  def rollMin(c: Column, n: Int, minPeriods: Int, w: WindowSpec): Column = {
-    val f = trailing(w, n); withMinPeriods(min(c).over(f), c, f, minPeriods)
-  }
-  def rollMax(c: Column, n: Int, minPeriods: Int, w: WindowSpec): Column = {
-    val f = trailing(w, n); withMinPeriods(max(c).over(f), c, f, minPeriods)
-  }
+  def rollMin(c: String, n: Int, minPeriods: Int, w: WindowSpec): Feature =
+    rolling("min", min, c, n, minPeriods, w)
+  def rollMax(c: String, n: Int, minPeriods: Int, w: WindowSpec): Feature =
+    rolling("max", max, c, n, minPeriods, w)
 
   /** Rolling sum with min_periods. */
-  def rollSum(c: Column, n: Int, minPeriods: Int, w: WindowSpec): Column = {
-    val f = trailing(w, n); withMinPeriods(sum(c).over(f), c, f, minPeriods)
-  }
+  def rollSum(c: String, n: Int, minPeriods: Int, w: WindowSpec): Feature =
+    rolling("sum", sum, c, n, minPeriods, w)
 
   /** First difference `x - x[t-1]` (`pre_processing.py:862-864`). */
-  def diff(c: Column, w: WindowSpec, k: Int = 1): Column = c - lag(c, k).over(w)
+  def diff(c: String, w: WindowSpec, k: Int = 1): Feature = {
+    val l = lagAgg(c, k, w); Feature(Seq(l), col(c) - l.ref)
+  }
 
   /** Gradient per second: `diff / Δt_seconds` (`pre_processing.py:878`). */
-  def gradientPerSecond(c: Column, ts: Column, w: WindowSpec): Column = {
-    val dt = unix_timestamp(ts) - unix_timestamp(lag(ts, 1).over(w))
-    when(dt > 0, (c - lag(c, 1).over(w)) / dt.cast("double"))
+  def gradientPerSecond(c: String, ts: String, w: WindowSpec): Feature = {
+    val (lc, lt) = (lagAgg(c, 1, w), lagAgg(ts, 1, w))
+    val dt = unix_timestamp(col(ts)) - unix_timestamp(lt.ref)
+    Feature(Seq(lc, lt), when(dt > 0, (col(c) - lc.ref) / dt.cast("double")))
   }
 
   /** Percent change over `p` periods (`pct_change(periods=p)*100`,
     * `pre_processing.py:870-871,1172`). Null (not ±inf) when the base is
     * 0/null — declarative rewrite of pandas' inf quirk (SURVEY §7.4-6). */
-  def pctChange(c: Column, p: Int, w: WindowSpec): Column = {
-    val base = lag(c, p).over(w)
-    when(base.isNotNull && base =!= 0, (c / base - 1) * 100)
+  def pctChange(c: String, p: Int, w: WindowSpec): Feature = {
+    val base = lagAgg(c, p, w)
+    Feature(Seq(base),
+      when(base.ref.isNotNull && base.ref =!= 0, (col(c) / base.ref - 1) * 100))
   }
 
   /** Forward fill = most recent non-null at or before the current row
@@ -102,34 +149,40 @@ object WindowOps {
   /** Cooling-trend flag: 1 when the last 3 consecutive deltas are all
     * negative (`calculate_cooling_trend`, `pre_processing.py:874-881`).
     * Returns the *decrease indicator*; the caller sums it over a 3-row frame
-    * in a second select (window-over-window needs two projections). */
-  def decreaseFlag(c: Column, w: WindowSpec): Column =
-    when(lag(c, 1).over(w).isNotNull && c < lag(c, 1).over(w), 1).otherwise(0)
+    * once it is bound (window-over-window needs two projections). */
+  def decreaseFlag(c: String, w: WindowSpec): Feature = {
+    val prev = lagAgg(c, 1, w)
+    Feature(Seq(prev), when(prev.ref.isNotNull && col(c) < prev.ref, 1).otherwise(0))
+  }
 
   /** Trailing z-score anomaly detection (`detect_anomalies_jit`,
     * `pre_processing.py:996-1037`): stats over the previous `n` rows
     * *excluding* the current one, std floored at `stdFloor`, flag -1/+1
     * outside ±`nSigma`σ, require > `minCount` prior rows.
-    * Returns (mean, std, flag, dropPct) columns. */
-  def anomalyZ(c: Column, w: WindowSpec, n: Int = 24, nSigma: Double = 2.0,
-               stdFloor: Double = 0.001, minCount: Int = 12): (Column, Column, Column, Column) = {
-    val prev = w.rowsBetween(-n.toLong, -1L)
-    val cnt  = count(c).over(prev)
-    val m    = avg(c).over(prev)
-    val s    = greatest(stddev_pop(c).over(prev), lit(stdFloor))
-    val flag = when(cnt <= minCount || c.isNull, 0)
-      .when(c < m - lit(nSigma) * s, -1)
-      .when(c > m + lit(nSigma) * s, 1)
+    * Returns the (mean, std, flag, dropPct) features, which read one
+    * `count`, `avg` and `stddev_pop` between them. */
+  def anomalyZ(c: String, w: WindowSpec, n: Int = 24, nSigma: Double = 2.0,
+               stdFloor: Double = 0.001,
+               minCount: Int = 12): (Feature, Feature, Feature, Feature) = {
+    def prev(fn: String, agg: Column => Column) = frameAgg(fn, agg, c, -n.toLong, -1L, w)
+    val (cnt, m, sd) = (prev("count", count), prev("avg", avg), prev("stdpop", stddev_pop))
+    val s = greatest(sd.ref, lit(stdFloor))
+    val x = col(c)
+    val flag = when(cnt.ref <= minCount || x.isNull, 0)
+      .when(x < m.ref - lit(nSigma) * s, -1)
+      .when(x > m.ref + lit(nSigma) * s, 1)
       .otherwise(0)
-    val dropPct = when(flag === -1 && m > 0, (m - c) / m * 100).otherwise(lit(0.0))
-    (when(cnt > minCount, m), when(cnt > minCount, s), flag, dropPct)
+    val dropPct = when(flag === -1 && m.ref > 0, (m.ref - x) / m.ref * 100).otherwise(lit(0.0))
+    def f(v: Column) = Feature(Seq(cnt, m, sd), v)
+    (f(when(cnt.ref > minCount, m.ref)), f(when(cnt.ref > minCount, s)), f(flag), f(dropPct))
   }
 
   /** Baseline-ratio drift `(maShort/maLong - 1)*100` (`pre_processing.py:1185-1199`). */
-  def drift(c: Column, shortN: Int, longN: Int, minPeriodsLong: Int, w: WindowSpec): Column = {
+  def drift(c: String, shortN: Int, longN: Int, minPeriodsLong: Int, w: WindowSpec): Feature = {
     val maS = rollAvg(c, shortN, 1, w)
     val maL = rollAvg(c, longN, minPeriodsLong, w)
-    when(maL.isNotNull && maL =!= 0, (maS / maL - 1) * 100)
+    Feature(maS.aggs ++ maL.aggs,
+      when(maL.value.isNotNull && maL.value =!= 0, (maS.value / maL.value - 1) * 100))
   }
 
   /** Savitzky–Golay smoothing as a fixed-weight FIR over a centered window

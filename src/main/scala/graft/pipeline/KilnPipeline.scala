@@ -15,13 +15,16 @@ import graft.operators.{JoinOps, TimeSeriesOps, WindowOps}
   * partitioning on zone, taken from the aligned frame's key set
   * ([[TimeSeriesOps.alignToGrid]]), and one (zone, ts) sort, so they
   * exchange no rows between them and run one task per zone partition;
-  * the label join is one broadcast nested loop against the tiny event
-  * table, and a single action materializes everything (SURVEY §3.1).
+  * each distinct window aggregate of the feature stage is evaluated once
+  * per row ([[features]]); the label join is one broadcast nested loop
+  * against the tiny event table, and a single action materializes
+  * everything (SURVEY §3.1).
   *
   * Data stays LONG (ts, zone, temp) throughout the feature stages — the
   * scale-critical choice (SURVEY §7.4-1): all windows partition by zone, so
   * the sort distributes; the wide pivot happens only at the end, on the
-  * reduced hourly frame.
+  * reduced hourly frame, in one two-phase `PivotFirst` aggregate
+  * ([[trainingMatrix]]).
   */
 object KilnPipeline {
 
@@ -41,34 +44,48 @@ object KilnPipeline {
 
   /** Stages 3-7: imputation remainder + lag/rolling/differential/anomaly
     * features (reference stages `impute..detect_temp_anomalies`,
-    * `pre_processing.py:1843-1888`), one window pass family per zone. */
+    * `pre_processing.py:1843-1888`), one window pass family per zone.
+    *
+    * With the default lags and windows, the 13 distinct window aggregates
+    * the features read (4 lags; count, mean and population std over the
+    * 24- and 72-row trailing frames and over the z-score detector's
+    * previous 24 rows) are each evaluated once per row, in one window
+    * operator ([[WindowOps.withFeatures]]); the features are plain
+    * expressions over them. The median imputation and the `drops_12h`
+    * count over the bound anomaly flag are one window operator each. */
   def features(aligned: DataFrame,
                lags: Seq[Int] = Seq(1, 6, 24),
                rollWindows: Seq[Int] = Seq(24, 72)): DataFrame = {
     val w = Window.partitionBy("zone").orderBy("ts")
     val med = Window.partitionBy("zone")
-    val v = col("temp")
     val withImpute = aligned
-      .withColumn("temp", coalesce(v, expr("percentile(temp, 0.5)").over(med)))
-    val withLags = lags.foldLeft(withImpute) { (df, k) =>
-      df.withColumn(s"temp_lag_$k", WindowOps.lagF(col("temp"), k, w))
+      .withColumn("temp", coalesce(col("temp"), expr("percentile(temp, 0.5)").over(med)))
+    val rolls = rollWindows.flatMap { n =>
+      val p = math.max(2, n / 4)
+      Seq(s"temp_ma_$n" -> WindowOps.rollAvg("temp", n, p, w),
+        s"temp_std_$n" -> WindowOps.rollStdPop("temp", n, p, w))
     }
-    val withRoll = rollWindows.foldLeft(withLags) { (df, n) =>
-      df.withColumn(s"temp_ma_$n", WindowOps.rollAvg(col("temp"), n, math.max(2, n / 4), w))
-        .withColumn(s"temp_std_$n", WindowOps.rollStdPop(col("temp"), n, math.max(2, n / 4), w))
-    }
-    val (m24, s24, flag, dropPct) = WindowOps.anomalyZ(col("temp"), w)
-    withRoll
-      .withColumn("temp_diff", WindowOps.diff(col("temp"), w))
-      .withColumn("temp_pct_3h", WindowOps.pctChange(col("temp"), 3, w))
-      .withColumn("cooling_dec", WindowOps.decreaseFlag(col("temp"), w))
-      .withColumn("anomaly_mean", m24)
-      .withColumn("anomaly_std", s24)
-      .withColumn("anomaly", flag)
-      .withColumn("drop_pct", dropPct)
+    val (m24, s24, flag, dropPct) = WindowOps.anomalyZ("temp", w)
+    val all = lags.map(k => s"temp_lag_$k" -> WindowOps.lagF("temp", k, w)) ++ rolls ++ Seq(
+      "temp_diff" -> WindowOps.diff("temp", w),
+      "temp_pct_3h" -> WindowOps.pctChange("temp", 3, w),
+      "cooling_dec" -> WindowOps.decreaseFlag("temp", w),
+      "anomaly_mean" -> m24,
+      "anomaly_std" -> s24,
+      "anomaly" -> flag,
+      "drop_pct" -> dropPct)
+    WindowOps.withFeatures(withImpute, all: _*)
       .withColumn("drops_12h",
-        sum((flag === -1).cast("int")).over(w.rowsBetween(-11, 0)))
+        sum((col("anomaly") === -1).cast("int")).over(w.rowsBetween(-11, 0)))
   }
+
+  /** The reference's risk bucket of a score in [0, 1] (null for a null
+    * score). `risk_level` is this function of `risk_score` everywhere. */
+  def riskLevel(score: Column): Column =
+    when(score < 0.25, "Low")
+      .when(score < 0.5, "Moderate")
+      .when(score < 0.75, "High")
+      .when(score.isNotNull, "Critical")
 
   /** Stage 9: composite risk indicators (reference
     * `create_accretion_indicator_features`, `pre_processing.py:1363-1439`):
@@ -83,11 +100,7 @@ object KilnPipeline {
           .otherwise(lit(0.0)), lit(0.0)) * 0.2
     featured
       .withColumn("risk_score", greatest(least(score, lit(1.0)), lit(0.0)))
-      .withColumn("risk_level",
-        when(col("risk_score") < 0.25, "Low")
-          .when(col("risk_score") < 0.5, "Moderate")
-          .when(col("risk_score") < 0.75, "High")
-          .otherwise("Critical"))
+      .withColumn("risk_level", riskLevel(col("risk_score")))
   }
 
   /** Stage 10: interval-event labeling (reference `create_target_variables`,
@@ -128,41 +141,22 @@ object KilnPipeline {
 
   /** Final reshape: pivot the reduced per-zone hourly frame wide
     * (reference's aligned matrix, `pre_processing.py:1941`), with explicit
-    * zone values to skip the pivot-discovery pass. Columns and values are
-    * those of one `pivot("zone", zones).agg(first(c) ...)` over all of
-    * `valueCols`: `ts`, then `<zone>_<col>` for each zone and value column
-    * (a bare `<zone>` when there is one value column).
+    * zone values to skip the pivot-discovery pass: `ts`, then
+    * `<zone>_<col>` for each zone and value column (a bare `<zone>` when
+    * there is one value column), each the `first` value of its cell.
     *
-    * Columns whose type Spark's `PivotFirst` supports (numeric, boolean,
-    * decimal) are pivoted apart from the rest. One other column in the
-    * same pivot call (here the string `risk_level`) makes the analyzer drop
-    * its two-phase `PivotFirst` rewrite for the whole call and evaluate
-    * zones × columns `first(if (zone <=> k) c else null)` aggregates on
-    * every row, in a non-codegen `SortAggregate` (a string in the
-    * aggregation buffer rules out the hash aggregate). Pivoted alone, the
-    * capable columns take the two-phase hash-aggregate path. The rest
-    * pivot `collect_list`, whose object buffer runs in
-    * `ObjectHashAggregate`; its first element is the first non-null value,
-    * which is what the fallback's null-skipping `first` returns. The two
-    * halves join on `ts`. */
+    * Value columns must be of a type Spark's `PivotFirst` supports
+    * (numeric, boolean, decimal). One other column in the call (the string
+    * `risk_level`, say) makes the analyzer drop the two-phase `PivotFirst`
+    * hash aggregate for the whole call and evaluate zones × columns
+    * `first(if (zone <=> k) c else null)` aggregates on every row, in a
+    * non-codegen `SortAggregate`. [[trainingMatrix]] derives `risk_level`
+    * after the pivot instead. */
   def toWide(labeled: DataFrame, zones: Seq[Int], valueCols: Seq[String]): DataFrame = {
-    val values = zones.map(_.toString)
-    val (capable, other) =
-      valueCols.partition(c => PivotFirst.supportsDataType(labeled.schema(c).dataType))
-    val halves = Seq(
-      capable -> ((c: Column) => first(c)),
-      other -> ((c: Column) => get(collect_list(c), lit(0))))
-      .filter(_._1.nonEmpty).map { case (cols, agg) =>
-        val aggs = cols.map(c => agg(col(c)).as(c))
-        cols -> labeled.groupBy("ts").pivot("zone", values).agg(aggs.head, aggs.tail: _*)
-      }
-    // a pivot of one column names its outputs by the bare zone
-    val cell = halves.flatMap { case (cols, p) =>
-      cols.map(c => c -> ((z: String) => p(if (cols.size == 1) s"`$z`" else s"`${z}_$c`")))
-    }.toMap
-    halves.map(_._2).reduce(_.join(_, "ts")).select(col("ts") +:
-      (for (z <- values; c <- valueCols)
-        yield cell(c)(z).as(if (valueCols.size == 1) z else s"${z}_$c")): _*)
+    val other = valueCols.filterNot(c => PivotFirst.supportsDataType(labeled.schema(c).dataType))
+    require(other.isEmpty, s"toWide pivots PivotFirst-capable columns only, got ${other.mkString(", ")}")
+    val aggs = valueCols.map(c => first(col(c)).as(c))
+    labeled.groupBy("ts").pivot("zone", zones.map(_.toString)).agg(aggs.head, aggs.tail: _*)
   }
 
   /** The whole pipeline, end to end, as one plan. */
@@ -170,22 +164,29 @@ object KilnPipeline {
     label(riskScore(features(align(readings))), events)
 
   /** The reference's training input (`pre_processing.py:1941`): the labeled
-    * frame pivoted wide (`ZONE_<z>_<feature>` names) with the priority-class
-    * feature cap applied — at full feature width the pivot emits
-    * `zones × features` columns, and [[FeatureSelect.reduceDimension]] is
-    * what keeps the downstream vector assembly bounded. */
+    * frame pivoted wide (`ZONE_<z>_<feature>` names; a bare `<z>` for a
+    * single feature) with the priority-class feature cap applied — at full
+    * feature width the pivot emits `zones × features` columns, and
+    * [[FeatureSelect.reduceDimension]] is what keeps the downstream vector
+    * assembly bounded.
+    *
+    * Columns, order and values are those of one `first` pivot over all of
+    * `valueCols`. `risk_level` is not pivoted: [[toWide]] pivots
+    * `risk_score`, and each `<z>_risk_level` is [[riskLevel]] of its
+    * zone's score, null where the (ts, zone) cell is missing. */
   def trainingMatrix(labeled: DataFrame, zones: Seq[Int], valueCols: Seq[String],
                      maxFeatures: Int = 500): DataFrame = {
-    val wide = toWide(labeled, zones, valueCols)
-    // one select, not a rename per column: the pivot emits zones × features
-    // columns and each withColumnRenamed would add a full analyzer pass
-    val pat = "^(\\d+)_(.+)$".r
-    val renamed = wide.select(wide.columns.map { c =>
-      pat.findFirstMatchIn(c).fold(col(s"`$c`"))(g =>
-        col(s"`$c`").as(s"ZONE_${g.group(1)}_${g.group(2)}"))
-    }: _*)
+    val pivoted = valueCols.map(c => if (c == "risk_level") "risk_score" else c).distinct
+    val wide = toWide(labeled, zones, pivoted)
+    def cell(z: Int, c: String) = wide(if (pivoted.size == 1) s"`$z`" else s"`${z}_$c`")
+    // one select, not a column per withColumn: the pivot emits zones ×
+    // features columns and each withColumn would add a full analyzer pass
+    val named = wide.select(wide("ts") +: (for (z <- zones; c <- valueCols) yield {
+      val v = if (c == "risk_level") riskLevel(cell(z, "risk_score")) else cell(z, c)
+      v.as(if (valueCols.size == 1) z.toString else s"ZONE_${z}_$c")
+    }): _*)
     // ts is the frame's INDEX (the reference's DatetimeIndex, which
     // reduce_dimension never sees in pandas) — excluded from the cap
-    FeatureSelect.reduceDimension(renamed, maxFeatures, exclude = Seq("ts"))
+    FeatureSelect.reduceDimension(named, maxFeatures, exclude = Seq("ts"))
   }
 }

@@ -127,9 +127,9 @@ object WindowQ {
               |ORDER BY event_type, event_id""".stripMargin)),
 
     "q97_rolling_median" -> Q(
-      (s, d) => series(s, d)
-        .select(col("ts"), col("event_type"),
-          dec4(WindowOps.rollMedian(col("v"), 24, 12, w)).as("med_24h"))
+      (s, d) => WindowOps.withFeatures(series(s, d),
+          "med_24h" -> WindowOps.rollMedian("v", 24, 12, w).map(dec4))
+        .select("ts", "event_type", "med_24h")
         .orderBy("ts", "event_type"),
       Some(s"""WITH $sqlSeries
               |SELECT ts, event_type,
@@ -142,11 +142,10 @@ object WindowQ {
     // W1: lag features at 1/6/24 h (reference `create_lag`,
     // `pre_processing.py:333-347`; simple lags `simple_pre_processing.py:305`).
     "q30_lag_features" -> Q(
-      (s, d) => series(s, d)
+      (s, d) => WindowOps.withFeatures(series(s, d),
+          Seq(1, 6, 24).map(k => s"lag_${k}h" -> WindowOps.lagF("v", k, w).map(dec4)): _*)
         .select(col("ts"), col("event_type"), dec4(col("v")).as("v"),
-          dec4(WindowOps.lagF(col("v"), 1, w)).as("lag_1h"),
-          dec4(WindowOps.lagF(col("v"), 6, w)).as("lag_6h"),
-          dec4(WindowOps.lagF(col("v"), 24, w)).as("lag_24h"))
+          col("lag_1h"), col("lag_6h"), col("lag_24h"))
         .orderBy("ts", "event_type"),
       Some(s"""WITH $sqlSeries
               |SELECT ts, event_type, ${r4("v")} AS v,
@@ -160,11 +159,11 @@ object WindowQ {
     // (reference `rolling_mean_jit`/`rolling_std_jit`, `pre_processing.py:520-585`;
     // population σ per `pre_processing.py:583`, sample σ per pandas default).
     "q31_rolling_mean_std" -> Q(
-      (s, d) => series(s, d)
-        .select(col("ts"), col("event_type"),
-          dec6(WindowOps.rollAvg(col("v"), 24, 12, w)).as("ma24"),
-          dec6(WindowOps.rollStdPop(col("v"), 24, 12, w)).as("std24_pop"),
-          dec6(WindowOps.rollStdSamp(col("v"), 24, 12, w)).as("std24_samp"))
+      (s, d) => WindowOps.withFeatures(series(s, d),
+          "ma24" -> WindowOps.rollAvg("v", 24, 12, w).map(dec6),
+          "std24_pop" -> WindowOps.rollStdPop("v", 24, 12, w).map(dec6),
+          "std24_samp" -> WindowOps.rollStdSamp("v", 24, 12, w).map(dec6))
+        .select("ts", "event_type", "ma24", "std24_pop", "std24_samp")
         .orderBy("ts", "event_type"),
       Some(s"""WITH $sqlSeries
               |SELECT ts, event_type,
@@ -178,11 +177,11 @@ object WindowQ {
     // W4: rolling extrema (reference `rolling_min_jit`/`rolling_max_jit`,
     // `pre_processing.py:587-637`).
     "q32_rolling_minmax" -> Q(
-      (s, d) => series(s, d)
-        .select(col("ts"), col("event_type"),
-          dec4(WindowOps.rollMin(col("v"), 24, 1, w)).as("min24"),
-          dec4(WindowOps.rollMax(col("v"), 24, 1, w)).as("max24"),
-          dec4(WindowOps.rollSum(col("v"), 24, 1, w)).as("sum24"))
+      (s, d) => WindowOps.withFeatures(series(s, d),
+          "min24" -> WindowOps.rollMin("v", 24, 1, w).map(dec4),
+          "max24" -> WindowOps.rollMax("v", 24, 1, w).map(dec4),
+          "sum24" -> WindowOps.rollSum("v", 24, 1, w).map(dec4))
+        .select("ts", "event_type", "min24", "max24", "sum24")
         .orderBy("ts", "event_type"),
       Some(s"""WITH $sqlSeries
               |SELECT ts, event_type,
@@ -195,10 +194,10 @@ object WindowQ {
 
     // W6: first difference + per-second gradient (`pre_processing.py:862-878`).
     "q33_diff_gradient" -> Q(
-      (s, d) => series(s, d)
-        .select(col("ts"), col("event_type"),
-          dec4(WindowOps.diff(col("v"), w)).as("diff_1h"),
-          dec6(WindowOps.gradientPerSecond(col("v"), col("ts"), w)).as("grad_per_s"))
+      (s, d) => WindowOps.withFeatures(series(s, d),
+          "diff_1h" -> WindowOps.diff("v", w).map(dec4),
+          "grad_per_s" -> WindowOps.gradientPerSecond("v", "ts", w).map(dec6))
+        .select("ts", "event_type", "diff_1h", "grad_per_s")
         .orderBy("ts", "event_type"),
       Some(s"""WITH $sqlSeries
               |SELECT ts, event_type,
@@ -211,9 +210,9 @@ object WindowQ {
     // W7: percent change over 3 periods with null-not-inf semantics
     // (`pct_change(periods=3)*100`, `pre_processing.py:870-871`; SURVEY §7.4-6).
     "q34_pct_change" -> Q(
-      (s, d) => series(s, d)
-        .select(col("ts"), col("event_type"),
-          dec6(WindowOps.pctChange(col("v"), 3, w)).as("pct_3h"))
+      (s, d) => WindowOps.withFeatures(series(s, d),
+          "pct_3h" -> WindowOps.pctChange("v", 3, w).map(dec6))
+        .select("ts", "event_type", "pct_3h")
         .orderBy("ts", "event_type"),
       Some(s"""WITH $sqlSeries
               |SELECT ts, event_type,
@@ -225,8 +224,7 @@ object WindowQ {
     // W8: consecutive-decrease (cooling) trend flag
     // (`calculate_cooling_trend`, `pre_processing.py:874-881`).
     "q35_cooling_trend" -> Q(
-      (s, d) => series(s, d)
-        .withColumn("dcr", WindowOps.decreaseFlag(col("v"), w))
+      (s, d) => WindowOps.withFeatures(series(s, d), "dcr" -> WindowOps.decreaseFlag("v", w))
         .withColumn("cooling",
           (sum("dcr").over(w.rowsBetween(-2, 0)) >= 3).cast("int"))
         .select("ts", "event_type", "dcr", "cooling")
@@ -249,12 +247,10 @@ object WindowQ {
     // pure window-expression composition inside one partitioned sort.
     "q36_anomaly_zscore" -> Q(
       (s, d) => {
-        val (m, sd, flag, dropPct) = WindowOps.anomalyZ(col("v"), w)
-        series(s, d)
-          .withColumn("mean24", dec6(m))
-          .withColumn("std24", dec6(sd))
-          .withColumn("anomaly", flag)
-          .withColumn("drop_pct", dec4(dropPct))
+        val (m, sd, flag, dropPct) = WindowOps.anomalyZ("v", w)
+        WindowOps.withFeatures(series(s, d),
+            "mean24" -> m.map(dec6), "std24" -> sd.map(dec6), "anomaly" -> flag,
+            "drop_pct" -> dropPct.map(dec4))
           .withColumn("drops_12h",
             sum((col("anomaly") === -1).cast("int")).over(w.rowsBetween(-11, 0)))
           .select("ts", "event_type", "mean24", "std24", "anomaly", "drop_pct", "drops_12h")
@@ -287,10 +283,10 @@ object WindowQ {
     // (`pre_processing.py:1185-1199`).
     "q37_drift" -> Q(
       (s, d) => {
-        val dr = WindowOps.drift(col("v"), 24, 72, 18, w)
-        series(s, d)
-          .withColumn("drift_pct", dec6(dr))
-          .withColumn("drift_flag", when(dr > 15, 1).otherwise(0))
+        val dr = WindowOps.drift("v", 24, 72, 18, w)
+        WindowOps.withFeatures(series(s, d),
+            "drift_pct" -> dr.map(dec6),
+            "drift_flag" -> dr.map(x => when(x > 15, 1).otherwise(0)))
           .select("ts", "event_type", "drift_pct", "drift_flag")
           .orderBy("ts", "event_type")
       },
@@ -314,10 +310,10 @@ object WindowQ {
     // (`pre_processing.py:1240-1248`; sample σ floored at 0.001).
     "q38_zscore_spread" -> Q(
       (s, d) => {
-        val m = WindowOps.rollAvg(col("v"), 30, 7, w)
-        val sd = WindowOps.rollStdSamp(col("v"), 30, 7, w)
-        series(s, d)
-          .withColumn("z30", dec6(when(sd > 0.001, (col("v") - m) / sd)))
+        val (m, sd) = (WindowOps.rollAvg("v", 30, 7, w), WindowOps.rollStdSamp("v", 30, 7, w))
+        val z30 = WindowOps.Feature(m.aggs ++ sd.aggs,
+          dec6(when(sd.value > 0.001, (col("v") - m.value) / sd.value)))
+        WindowOps.withFeatures(series(s, d), "z30" -> z30)
           .select("ts", "event_type", "z30")
           .orderBy("ts", "event_type")
       },
@@ -616,8 +612,8 @@ object WindowQ {
     // raw-data shuffle, everything else on the hourly grid.
     "q70_early_warning" -> Q(
       (s, d) => {
-        val (_, _, flag, _) = WindowOps.anomalyZ(col("v"), w)
-        val flagged = series(s, d).withColumn("anomaly", flag)
+        val (_, _, flag, _) = WindowOps.anomalyZ("v", w)
+        val flagged = WindowOps.withFeatures(series(s, d), "anomaly" -> flag)
         val perHour = flagged.groupBy("ts").agg(
           sum((col("anomaly") === -1).cast("int")).as("series_in_drop"),
           max((col("anomaly") === -1).cast("int")).as("any_warning"))

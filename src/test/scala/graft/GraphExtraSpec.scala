@@ -30,6 +30,14 @@ class GraphExtraSpec extends SparkSpec {
     assert(GraphOps.adamicAdar(star, "a", "b", Some(3L), dec6).isEmpty)
   }
 
+  test("q322 runs at sf0.001 with AQE on and off, with equal results") {
+    // degree-1 wedge centers: 1/ln(1) must never be evaluated (ANSI divide)
+    val q = graft.queries.Registry.all("q322_adamic_adar")
+    val Seq(on, off) = Seq(true, false).map(aqe => withAqe(aqe)(q.fn(spark, sfTiny).collect().toSeq))
+    assert(on.nonEmpty)
+    assert(on == off)
+  }
+
   test("k-core: pendant chain peels in cascade, the 4-clique survives k=3") {
     // 4-clique {1,2,3,4} + chain 4-5-6: peeling 6 (deg 1) exposes 5
     val e = (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),

@@ -2,13 +2,15 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 import graft.pipeline.KilnPipeline
+import graft.queries.Registry
 
 /** Semantic-parity replay on a kiln-shaped deterministic fixture
   * (FIXTURES.md §A): 2-minute readings for 3 zones over 10 days, one
@@ -81,37 +83,73 @@ class KilnPipelineSpec extends SparkSpec {
   }
 
   /** The plan Spark runs with adaptive execution off, as the benchmarks run it. */
-  private def staticPlan(df: DataFrame): SparkPlan = {
-    val key = "spark.sql.adaptive.enabled"
-    val was = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try df.queryExecution.executedPlan finally spark.conf.set(key, was)
-  }
+  private def staticPlan(df: DataFrame): SparkPlan = withAqe(false)(df.queryExecution.executedPlan)
 
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(nodes)
 
-  test("toWide equals one pivot call over all value columns") {
-    val labeled = out.withColumn("risk_word", lower(col("risk_level")))
+  /** The window expressions of each window operator, aliases stripped. */
+  private def windowExprs(df: DataFrame): Seq[Seq[Expression]] =
+    nodes(staticPlan(df)).collect { case w: WindowExec =>
+      w.windowExpression.map { case a: Alias => a.child; case e => e }
+    }
+
+  /** Window expressions that some window operator evaluates twice. */
+  private def repeated(windows: Seq[Seq[Expression]]): Seq[Expression] =
+    windows.flatMap(_.groupBy(_.canonicalized).values.filter(_.size > 1).map(_.head))
+
+  test("trainingMatrix equals one pivot call, risk_level derived") {
+    // a missing (ts, zone) cell: its pivoted values are null, its level too
+    val gap = Timestamp.valueOf("2024-06-07 12:00:00")
+    val labeled = out.filter(!(col("zone") === 4 && col("ts") === gap))
     val cases = Seq(
       Seq("temp", "risk_level", "anomaly", "days_to_critical", "risk_score"),
-      Seq("risk_level", "temp", "risk_word"),  // the PivotFirst half has one column
-      Seq("temp", "risk_level"),              // both halves have one column
-      Seq("risk_score"),
-      Seq("risk_level"),
-      Seq("risk_word", "risk_level"))
+      Seq("risk_level", "temp"),  // the level without its score
+      Seq("risk_score", "risk_level"),
+      Seq("temp", "risk_score"),
+      Seq("risk_level"),          // one value column: bare zone names
+      Seq("temp"))
     cases.foreach { valueCols =>
       val aggs = valueCols.map(c => first(col(c)).as(c))
-      val want = labeled.groupBy("ts").pivot("zone", Seq("3", "4", "5"))
+      val pivot = labeled.groupBy("ts").pivot("zone", Seq("3", "4", "5"))
         .agg(aggs.head, aggs.tail: _*)
-      val got = KilnPipeline.toWide(labeled, Seq(3, 4, 5), valueCols)
+      val want = pivot.select(pivot.columns.map(c =>
+        if (valueCols.size == 1 || c == "ts") col(s"`$c`") else col(s"`$c`").as(s"ZONE_$c")): _*)
+      val got = KilnPipeline.trainingMatrix(labeled, Seq(3, 4, 5), valueCols, maxFeatures = 1000)
       assert(got.schema == want.schema, valueCols)
-      assert(got.orderBy("ts").collect().toSeq == want.orderBy("ts").collect().toSeq, valueCols)
+      val rows = got.orderBy("ts").collect().toSeq
+      assert(rows == want.orderBy("ts").collect().toSeq, valueCols)
+      if (valueCols.contains("risk_level")) {
+        val level = if (valueCols.size == 1) "4" else "ZONE_4_risk_level"
+        val cell = rows.find(_.getAs[Timestamp]("ts") == gap).get
+        assert(cell.isNullAt(cell.fieldIndex(level)), valueCols)
+        assert(rows.count(r => r.isNullAt(r.fieldIndex(level))) == 1, valueCols)
+      }
       val plan = staticPlan(got)
       val text = plan.toString
-      if (valueCols.exists(c => labeled.schema(c).dataType != StringType))
-        assert(text.contains("pivotfirst"), valueCols)
-      assert(!text.contains("first(if ((zone"), valueCols)
+      assert(text.contains("pivotfirst"), valueCols)
+      assert(!text.contains("first(if ((zone") && !text.contains("collect_list"), valueCols)
       assert(!nodes(plan).exists(_.isInstanceOf[SortAggregateExec]), valueCols)
+      assert(!nodes(plan).exists(_.isInstanceOf[BaseJoinExec]), valueCols)
+    }
+    assert(intercept[IllegalArgumentException](
+      KilnPipeline.toWide(labeled, Seq(3, 4, 5), Seq("temp", "risk_level"))
+    ).getMessage.contains("risk_level"))
+  }
+
+  test("process evaluates each window aggregate once") {
+    // a plan of its own: the cached `out` would stand in for an identical one
+    val windows = windowExprs(KilnPipeline.process(readings, events.filter(col("event_id").isNotNull)))
+    info(s"window expressions per operator: ${windows.map(_.size).mkString(", ")}")
+    assert(repeated(windows).isEmpty, repeated(windows).mkString("; "))
+    assert(windows.map(_.size).sum <= 16)
+  }
+
+  test("window queries q31 q36 q37 q38 q70 evaluate each window aggregate once") {
+    Seq("q31_rolling_mean_std", "q36_anomaly_zscore", "q37_drift", "q38_zscore_spread",
+      "q70_early_warning").foreach { q =>
+      val windows = windowExprs(Registry.all(q).fn(spark, sfTiny))
+      info(s"$q: ${windows.map(_.size).mkString(", ")}")
+      assert(repeated(windows).isEmpty, s"$q: ${repeated(windows).mkString("; ")}")
     }
   }
 

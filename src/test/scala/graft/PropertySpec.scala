@@ -46,9 +46,9 @@ class PropertySpec extends SparkSpec {
     forAll(Gen.zip(seriesGen, Gen.choose(2, 10))) { case (vs, minP) =>
       whenever(vs.nonEmpty) {
         val w = Window.orderBy("ts")
-        val out = toDf(vs)
-          .withColumn("cnt", count("v").over(w.rowsBetween(-9, 0)))
-          .withColumn("m", WindowOps.rollAvg($"v", 10, minP, w))
+        val out = WindowOps.withFeatures(
+            toDf(vs).withColumn("cnt", count("v").over(w.rowsBetween(-9, 0))),
+            "m" -> WindowOps.rollAvg("v", 10, minP, w))
           .collect()
         out.foreach { r =>
           val cnt = r.getLong(r.fieldIndex("cnt"))
@@ -63,8 +63,9 @@ class PropertySpec extends SparkSpec {
     forAll(seriesGen) { vs =>
       whenever(vs.nonEmpty) {
         val w = Window.orderBy("ts")
-        val (_, _, flag, dropPct) = WindowOps.anomalyZ($"v", w)
-        val out = toDf(vs).select(flag.as("f"), dropPct.as("d")).collect()
+        val (_, _, flag, dropPct) = WindowOps.anomalyZ("v", w)
+        val out = WindowOps.withFeatures(toDf(vs), "f" -> flag, "d" -> dropPct)
+          .select("f", "d").collect()
         out.foreach { r =>
           assert(Set(-1, 0, 1).contains(r.getInt(0)))
           if (r.getInt(0) == -1) assert(r.getDouble(1) >= 0.0 || r.getDouble(1) == 0.0)

@@ -9,6 +9,15 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfTiny = "/root/testdata/sf0.001"
 
+  /** Runs `f` with adaptive query execution on or off, then restores the
+    * session's setting. */
+  def withAqe[T](on: Boolean)(f: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, on.toString)
+    try f finally spark.conf.set(key, was)
+  }
+
   /** Count the Spark jobs a thunk schedules, via the public
     * status-tracker job-group API (the status store updates async from
     * the listener bus, so poll until the count is stable). */

@@ -12,20 +12,23 @@ class WindowOpsSpec extends SparkSpec {
 
   test("rollAvg honors min_periods (null below threshold)") {
     val df = Seq(1.0, 2.0, 3.0, 4.0).zipWithIndex.map(_.swap).toDF("i", "v")
-    val out = df.select(WindowOps.rollAvg($"v", 3, 2, w).as("m")).collect().map(r =>
+    val out = WindowOps.withFeatures(df, "m" -> WindowOps.rollAvg("v", 3, 2, w))
+      .select("m").collect().map(r =>
       if (r.isNullAt(0)) None else Some(r.getDouble(0)))
     assert(out.toSeq == Seq(None, Some(1.5), Some(2.0), Some(3.0)))
   }
 
   test("rollStdPop is population sigma (divides by n)") {
     val df = Seq(2.0, 4.0).zipWithIndex.map(_.swap).toDF("i", "v")
-    val out = df.select(WindowOps.rollStdPop($"v", 2, 2, w).as("s")).collect()
+    val out = WindowOps.withFeatures(df, "s" -> WindowOps.rollStdPop("v", 2, 2, w))
+      .select("s").collect()
     assert(out(1).getDouble(0) == 1.0) // pop sigma of {2,4} = 1, sample = sqrt(2)
   }
 
   test("pctChange yields null (not inf) on zero base") {
     val df = Seq(0.0, 5.0, 10.0).zipWithIndex.map(_.swap).toDF("i", "v")
-    val out = df.select(WindowOps.pctChange($"v", 1, w).as("p")).collect()
+    val out = WindowOps.withFeatures(df, "p" -> WindowOps.pctChange("v", 1, w))
+      .select("p").collect()
     assert(out(1).isNullAt(0))       // base 0 -> null
     assert(out(2).getDouble(0) == 100.0)
   }
@@ -34,8 +37,8 @@ class WindowOpsSpec extends SparkSpec {
     // 25 stable readings then a crash: trailing stats must exclude the crash
     val vals = Seq.fill(25)(100.0) :+ 10.0
     val df = vals.zipWithIndex.map(_.swap).toDF("i", "v")
-    val (_, _, flag, dropPct) = WindowOps.anomalyZ($"v", w)
-    val out = df.select(flag.as("f"), dropPct.as("d")).collect()
+    val (_, _, flag, dropPct) = WindowOps.anomalyZ("v", w)
+    val out = WindowOps.withFeatures(df, "f" -> flag, "d" -> dropPct).select("f", "d").collect()
     assert(out.last.getInt(0) == -1)
     assert(math.abs(out.last.getDouble(1) - 90.0) < 1e-9) // (100-10)/100*100
     assert(out.dropRight(1).forall(_.getInt(0) == 0))
