@@ -1,11 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Headline benchmark: runs every `SparkEntry.queries` entry against
   * `SPARK_GRAFT_SF_DIR` and prints ONE machine-readable JSON line.
   *
   * Protocol: each query runs `SPARK_GRAFT_PASSES` times (default 3) in
-  * session, clearing the SQL cache between passes; the reported number is
+  * session, with [[release]] between passes; the reported number is
   * the MEDIAN pass, with min/median/max and status kept per query under
   * `queries_detail`. Medians bound the influence of one noisy pass (GC,
   * page cache, compile stalls) on the round artifact — the driver's
@@ -15,9 +15,90 @@ import org.apache.spark.sql.SparkSession
   * `ok=false` with the error, its headline time is -1 (never a fast
   * fake success), and the process exits nonzero so a bench-only
   * regression (OOM, codegen failure) cannot hide in a green-looking
-  * artifact. */
+  * artifact.
+  *
+  * This object also holds the one session profile and the harness steps
+  * that every graft session shares: `Verify`, `Explain`, the tools under
+  * `graft.tools` and the test suites run [[session]], so the correctness
+  * gate checks the configuration this benchmark times. */
 object Bench {
-  private def jsonEscape(s: String): String =
+  /** The one session profile, on `local[cpus]` with `cpus` shuffle
+    * partitions. Idempotent: a second call returns the running session. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // the events loader's NTZ→timestamp normalization is only
+      // bit-identical under UTC (sources/Tables.scala)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // Measured on this suite (see README bench protocol). AQE's
+      // stage-by-stage materialization adds a nondeterministic scheduling
+      // stall in local mode — identical q65 passes measured 1.6 s to 60 s
+      // with AQE on, 1.6-2.6 s steady with it off. Its cluster-scale
+      // benefits (runtime coalescing, skew splits) don't apply to fixed
+      // local fixtures, so the profile disables it; every operator remains
+      // AQE-compatible for cluster deployment (specs that test AQE itself
+      // turn it on with `SparkSpec.withAqe`).
+      .config("spark.sql.adaptive.enabled", "false")
+      // default 100-entry codegen cache thrashes on multi-pass runs of
+      // 20-40-unit plans: ~41 Janino recompiles per q65 pass, each a
+      // driver-serialized compile stall; 10k entries → 0 recompiles
+      .config("spark.sql.codegen.cache.maxEntries", 10000)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `SPARK_GRAFT_CPUS`: the local parallelism and shuffle fan-out of the
+    * harness mains (default 32). */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** `SPARK_GRAFT_ONLY`: an optional comma-separated list of query names
+    * for local iteration; unset selects every query. */
+  def isSelected(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY").forall(_.split(",").contains(name))
+
+  /** Warms the session once (codegen compiler, parquet readers, shuffle +
+    * broadcast machinery, sort) so the first timed query measures the
+    * query, not JVM init — without this q01 absorbs ~1s of one-time setup. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      import org.apache.spark.sql.functions._
+      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val rg = spark.read.parquet(s"$sfDir/region.parquet")
+      li.filter(col("l_quantity") > 0).groupBy("l_returnflag")
+        .agg(sum("l_quantity").as("s")).orderBy("l_returnflag").count()
+      li.limit(1024).join(broadcast(rg), li("l_orderkey") % 5 === rg("r_regionkey")).count()
+    } catch { case _: Throwable => () }
+
+  /** Full-consume action, NOT count(): under `df.count()` Catalyst prunes
+    * every output column the aggregate doesn't reference — windows,
+    * projections, whole feature pipelines vanish from the timed plan, and
+    * the "benchmark" times a bare scan. Pulling every row of the final
+    * plan on the executors forces every output column to be computed while
+    * adding no driver-transfer cost. */
+  def drain(df: DataFrame): Unit =
+    df.queryExecution.toRdd.foreachPartition { it => while (it.hasNext) it.next() }
+
+  /** Releases what a query persisted (dedup ops materialize their exploded
+    * shingle tables): leaked blocks would degrade every later pass/query
+    * via eviction pressure. clearCache only covers the SQL CacheManager;
+    * RDD-level localCheckpoint blocks (the CC loop's) must be unpersisted
+    * explicitly or they linger until a GC-driven ContextCleaner pass.
+    * BLOCKING on purpose: async removal floods the driver dispatcher with
+    * RemoveBlock RPCs exactly when the NEXT pass schedules its first
+    * stages — measured as idle-executor stalls inflating later passes
+    * 3-5×. Call it outside any timed window. */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20) —
+    * a tab or CR in an error message or builder-authored SQL would
+    * otherwise make a `json.load` of the artifact fail. */
+  def jsonEscape(s: String): String =
     s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -30,48 +111,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the events loader's NTZ→timestamp normalization is only
-      // bit-identical under UTC (sources/Tables.scala); pin it like every
-      // other graft session so bench plans match Verify's exactly
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Harness-only tuning, measured on this suite (see README bench
-      // protocol). AQE's stage-by-stage materialization adds a
-      // nondeterministic scheduling stall in local mode — identical q65
-      // passes measured 1.6 s to 60 s with AQE on, 1.6-2.6 s steady with it
-      // off. Its cluster-scale benefits (runtime coalescing, skew splits)
-      // don't apply to fixed local fixtures, so the BENCH session disables
-      // it; every operator remains AQE-compatible for cluster deployment.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // default 100-entry codegen cache thrashes on multi-pass runs of
-      // 20-40-unit plans: ~41 Janino recompiles per q65 pass, each a
-      // driver-serialized compile stall; 10k entries → 0 recompiles
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the session once (codegen compiler, parquet readers, shuffle +
-    // broadcast machinery, sort) so the first timed query measures the
-    // query, not JVM init — without this q01 absorbs ~1s of one-time setup
-    try {
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val rg = spark.read.parquet(s"$sfDir/region.parquet")
-      li.filter(col("l_quantity") > 0).groupBy("l_returnflag")
-        .agg(sum("l_quantity").as("s")).orderBy("l_returnflag").count()
-      li.limit(1024).join(broadcast(rg), li("l_orderkey") % 5 === rg("r_regionkey")).count()
-    } catch { case _: Throwable => () }
-    // optional comma-separated query-name filter for local profiling
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only.fold(SparkEntry.queries)(f => SparkEntry.queries.filter(kv => f(kv._1)))
-    // SPARK_GRAFT_REPEAT is honored as a deprecated alias for PASSES
-    val passes = sys.env.get("SPARK_GRAFT_PASSES")
-      .orElse(sys.env.get("SPARK_GRAFT_REPEAT"))
-      .map(_.toInt).getOrElse(3)
+    val nCores = cpus
+    val spark = session(nCores)
+    warmUp(spark, sfDir)
+    val selected = SparkEntry.queries.filter(kv => isSelected(kv._1))
+    val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
     require(passes >= 1, s"SPARK_GRAFT_PASSES must be >= 1, got $passes")
     // wall-clock budget (seconds): once elapsed exceeds it, remaining
     // queries drop to 1 pass so a slow box still completes the sweep
@@ -130,7 +174,6 @@ object Bench {
     // env var, and r12's committed 8-core artifact said "cores": 32
     // (VERDICT r12 finding #3) — the artifact must be self-describing.
     // The physical count stays available as `cores_physical`.
-    val nCores = cpus.toInt
     val nPhysical = Runtime.getRuntime.availableProcessors()
     // two renderings of the same results: the STDOUT line is a SUMMARY
     // (total + counts + the 10 slowest medians, guaranteed < 1.5 KB)
@@ -196,35 +239,14 @@ object Bench {
       while (p < passesHere && err.isEmpty) {
         val gc0 = gcMillis
         val t0 = System.nanoTime()
-        // Full-consume action, NOT count(): under `df.count()` Catalyst
-        // prunes every output column the aggregate doesn't reference —
-        // windows, projections, whole feature pipelines vanish from the
-        // timed plan, and the "benchmark" times a bare scan. Draining the
-        // final plan's rows on the executors forces every output column to
-        // be computed while adding no driver-transfer cost.
-        try {
-          fn(spark, sfDir).queryExecution.toRdd
-            .foreachPartition { it => while (it.hasNext) it.next() }
-        }
+        try drain(fn(spark, sfDir))
         catch { case e: Throwable =>
           err = Some(s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(300)}")
         }
         if (err.isEmpty) times += (System.nanoTime() - t0) / 1e9
         loads += math.rint(osBean.getSystemLoadAverage * 100) / 100
         gcs += math.rint((gcMillis - gc0) / 1000.0 * 1000) / 1000
-        // release per-query persisted intermediates (dedup ops materialize
-        // their exploded shingle tables): leaked blocks would degrade every
-        // later pass/query via eviction pressure — clear at the boundary,
-        // untimed. clearCache only covers the SQL CacheManager; RDD-level
-        // localCheckpoint blocks (the CC loop's) must be unpersisted
-        // explicitly or they linger until a GC-driven ContextCleaner pass.
-        // BLOCKING on purpose: async removal floods the driver dispatcher
-        // with RemoveBlock RPCs exactly when the NEXT pass schedules its
-        // first stages — measured as idle-executor stalls inflating later
-        // passes 3-5×. The wait happens here, outside the timed window.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        release(spark)
         p += 1
       }
       // GC hint at the query boundary, OUTSIDE the timed window (r12
@@ -233,10 +255,7 @@ object Bench {
       // 11.5 s vs 1.8 s quiet). Collecting the just-unpersisted blocks
       // here keeps one query's garbage from being charged to the next;
       // timings themselves are untouched (timed region unchanged).
-      // Disable with SPARK_GRAFT_GC_BETWEEN=false for back-to-back
-      // comparison with older artifacts.
-      if (!sys.env.get("SPARK_GRAFT_GC_BETWEEN").contains("false"))
-        System.gc()
+      System.gc()
       val sorted = times.sorted
       val r =
         if (err.isDefined) R(-1.0, -1.0, -1.0, ok = false, err, loads.toSeq, gcs.toSeq)

@@ -1,26 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json for the DuckDB compare (`tools/check.py`), plus
   * failed.tsv — one (query, error) line per query that threw, so a
-  * failure is recorded next to the results instead of only on stderr. */
+  * failure is recorded next to the results instead of only on stderr.
+  * Runs `Bench.session`, the profile the benchmark times, and honors the
+  * same `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_ONLY`. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.cpus)
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated query-name filter for local iteration — the
-    // driver leaves it unset and dumps everything (same contract as Bench)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only.fold(SparkEntry.queries)(f => SparkEntry.queries.filter(kv => f(kv._1)))
+    val selected = SparkEntry.queries.filter(kv => Bench.isSelected(kv._1))
     val failed = selected.toSeq.flatMap { case (name, fn) =>
       val err =
         try {
@@ -31,25 +22,13 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           Some(s"${e.getClass.getName}: ${e.getMessage}")
         }
-      // release per-query persisted intermediates (see graft.Bench)
-      spark.catalog.clearCache()
+      Bench.release(spark)
       err.map(name -> _)
     }
     Files.writeString(Paths.get(s"$outDir/failed.tsv"),
       failed.sorted.map { case (n, e) => s"$n\t${e.replaceAll("\\s+", " ")}\n" }
         .mkString("query\terror\n", "", ""))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = "\"" + Bench.jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

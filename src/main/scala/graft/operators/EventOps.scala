@@ -192,7 +192,8 @@ object EventOps {
     * transition matrix's size.
     *
     * Returns one row: (n_transitions, n_states, entropy_rate,
-    * max_entropy, predictability = 1 − H/H_max). */
+    * max_entropy, predictability = 1 − H/H_max); predictability is null
+    * for a single state, where H_max = 0. */
   def sequenceEntropyRate(events: DataFrame, keyCol: String, tsCol: String,
                           tiebreakCol: String, stateCol: String,
                           scoreOut: Column => Column): DataFrame = {
@@ -209,7 +210,7 @@ object EventOps {
       .select(col("n_transitions"), col("n_states"),
         scoreOut(col("h")).as("entropy_rate"),
         scoreOut(log(col("n_states").cast("double"))).as("max_entropy"),
-        scoreOut(lit(1.0) - col("h") / log(col("n_states").cast("double")))
+        scoreOut(lit(1.0) - try_divide(col("h"), log(col("n_states").cast("double"))))
           .as("predictability"))
   }
 
@@ -220,7 +221,8 @@ object EventOps {
     * axis. One lag window per key + one aggregate; gaps are integer
     * micros (exact).
     *
-    * Returns per key: (key, n_gaps, mean_gap_s, std_gap_s, burstiness). */
+    * Returns per key: (key, n_gaps, mean_gap_s, std_gap_s, burstiness);
+    * burstiness is null when every gap is 0 (σ + μ = 0). */
   def burstiness(events: DataFrame, keyCol: String, tsCol: String,
                  tiebreakCol: String, scoreOut: Column => Column): DataFrame = {
     val w = Window.partitionBy(keyCol).orderBy(col("us"), col(tiebreakCol))
@@ -235,7 +237,7 @@ object EventOps {
       .select(col(keyCol), col("n_gaps"),
         scoreOut(col("m")).as("mean_gap_s"),
         scoreOut(col("sd")).as("std_gap_s"),
-        scoreOut((col("sd") - col("m")) / (col("sd") + col("m"))).as("burstiness"))
+        scoreOut(try_divide(col("sd") - col("m"), col("sd") + col("m"))).as("burstiness"))
   }
 
   /** Local-peak detection on an hourly series: points strictly above both

@@ -1,12 +1,12 @@
 package graft.tools
 
+import graft.Bench
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Stage-level profiler for single registry queries — the measure-first
   * loop of the optimization guide (§1) without the Spark UI: runs the
-  * named queries with the BENCH session settings and prints, per query,
+  * named queries in `Bench.session` and prints, per query,
   * the job/stage count and the top stages by duration with task counts
   * and shuffle bytes, so "where is the time going" is answered from the
   * terminal. Usage:
@@ -17,17 +17,7 @@ object ProfileStages {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("q337_louvain"))
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.cpus)
 
     final case class St(name: String, ms: Long, tasks: Int,
                         shRead: Long, shWrite: Long, input: Long)
@@ -49,25 +39,16 @@ object ProfileStages {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // warm like Bench does
-    try {
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      li.filter(col("l_quantity") > 0).groupBy("l_returnflag")
-        .agg(sum("l_quantity")).count()
-    } catch { case _: Throwable => () }
+    Bench.warmUp(spark, sfDir)
 
     names.foreach { name =>
       val fn = graft.queries.Registry.all(name).fn
       for (p <- 1 to passes) {
         stages.clear(); jobs = 0
         val t0 = System.nanoTime()
-        fn(spark, sfDir).queryExecution.toRdd
-          .foreachPartition { it => while (it.hasNext) it.next() }
+        Bench.drain(fn(spark, sfDir))
         val wall = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        Bench.release(spark)
         // listener events arrive async; give the bus a moment
         Thread.sleep(500)
         val sumMs = stages.map(_.ms).sum

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Bench
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-exponent probe: times the most expensive gate queries at the
@@ -131,8 +132,7 @@ object ScaleProbe {
 
   private def timeOnce(spark: SparkSession, name: String, dir: String): Double = {
     val t0 = System.nanoTime()
-    graft.SparkEntry.queries(name)(spark, dir).queryExecution.toRdd
-      .foreachPartition((_: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => ())
+    Bench.drain(graft.SparkEntry.queries(name)(spark, dir))
     (System.nanoTime() - t0) / 1e9
   }
 
@@ -141,42 +141,21 @@ object ScaleProbe {
     val outPath = if (args.length > 1) args(1) else "SCALE_latest.json"
     val bigRoot = if (args.length > 2) args(2) else "/tmp/graft_scale_big"
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.cpus)
     val factors = probes.map(_._2).distinct.sorted
     val bigDirs = factors.map { f =>
       val d = s"$bigRoot/x$f"
       blowUp(spark, sfDir, d, f)
       f -> d
     }.toMap
-    // warm the session (codegen compiler, parquet readers, shuffle +
-    // broadcast machinery) so the FIRST timed pass measures the query,
-    // not JVM init — the Bench protocol's warmup block
-    try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val rg = spark.read.parquet(s"$sfDir/region.parquet")
-      li.filter(col("l_quantity") > 0).groupBy("l_returnflag")
-        .agg(sum("l_quantity").as("s")).orderBy("l_returnflag").count()
-      li.limit(1024).join(broadcast(rg),
-        li("l_orderkey") % 5 === rg("r_regionkey")).count()
-    } catch { case _: Throwable => () }
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val sel = only.fold(probes)(f => probes.filter(p => f(p._1)))
+    Bench.warmUp(spark, sfDir)
+    val sel = probes.filter(p => Bench.isSelected(p._1))
     val rows = sel.map { case (name, factor) =>
       def best(dir: String): Double =
         (1 to passes).map { _ =>
-          spark.sqlContext.clearCache()
-          timeOnce(spark, name, dir)
+          val t = timeOnce(spark, name, dir)
+          Bench.release(spark)
+          t
         }.min
       val tb = best(sfDir)
       val tg = best(bigDirs(factor))

@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import graft.sources.{Bucketing, Tables}
 
@@ -12,15 +10,8 @@ import graft.sources.{Bucketing, Tables}
   * in the repo relies on at 100 TB, pinned here on real written tables. */
 class BucketedJoinSpec extends SparkSpec {
 
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => p +: allNodes(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      p +: allNodes(q.plan)
-    case _ => p +: p.children.flatMap(allNodes)
-  }
-
   private def shuffles(df: org.apache.spark.sql.DataFrame): Int =
-    allNodes(df.queryExecution.executedPlan)
+    planNodes(df.queryExecution.executedPlan)
       .count(_.isInstanceOf[ShuffleExchangeExec])
 
   test("same-bucket-spec equi-join plans with zero exchanges; unbucketed shuffles") {

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,21 +12,6 @@ import graft.operators.CorpusOps
   * never pushed through a partition-less global window. */
 class CurationOpsSpec extends SparkSpec {
   import spark.implicits._
-
-  private def finalPlan(df: DataFrame): SparkPlan =
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-
-  /** Every node of an executed AQE plan, descending into materialized
-    * query stages (plain `collect` stops at QueryStageExec boundaries). */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      p +: allNodes(q.plan)
-    case a: AdaptiveSparkPlanExec => p +: allNodes(a.executedPlan)
-    case _ => p +: p.children.flatMap(allNodes)
-  }
 
   test("charEntropy: exact values on known distributions") {
     val docs = Seq(
@@ -54,9 +36,9 @@ class CurationOpsSpec extends SparkSpec {
     val docs = Seq((1L, "hello world")).toDF("doc_id", "text")
     val e = CorpusOps.charEntropy(docs, "doc_id", "text")
     assert(e.collect().length == 1)
-    val plan = finalPlan(e).toString
-    assert(!plan.contains("Exchange"),
-      s"row-local entropy must not shuffle:\n${plan.take(600)}")
+    val nodes = planNodes(e.queryExecution.executedPlan)
+    assert(!nodes.exists(_.nodeName.contains("Exchange")),
+      s"row-local entropy must not shuffle:\n${nodes.head.toString.take(600)}")
   }
 
   test("orderedPrefixSum equals the naive global window, ties and all") {
@@ -85,9 +67,9 @@ class CurationOpsSpec extends SparkSpec {
     // (mapPartitionsWithIndex over the frozen range-shuffled RDD) — the
     // only window anywhere may be the one over the bounded per-partition
     // offsets aggregate, never over the raw data
-    val windows = allNodes(finalPlan(cum)).collect { case w: WindowExec => w }
+    val windows = planNodes(cum.queryExecution.executedPlan).collect { case w: WindowExec => w }
     windows.foreach { w =>
-      val overAggregate = allNodes(w.child)
+      val overAggregate = planNodes(w.child)
         .exists(_.nodeName.contains("Aggregate"))
       assert(overAggregate,
         s"any window must sit above the offsets aggregate:\n$w")

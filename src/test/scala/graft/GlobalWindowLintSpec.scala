@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{GlobalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
 import graft.queries.Registry
 
@@ -79,22 +78,9 @@ class GlobalWindowLintSpec extends SparkSpec {
         "calendar-bounded — durations arrive pre-rounded to days)")
   )
 
-  private def finalPlan(df: DataFrame): SparkPlan =
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      p +: allNodes(q.plan)
-    case a: AdaptiveSparkPlanExec => p +: allNodes(a.executedPlan)
-    case _ => p +: p.children.flatMap(allNodes)
-  }
-
   private def boundedByConstruction(w: WindowExec): Boolean = {
     val ordersByPid = w.orderSpec.exists(_.references.exists(_.name == "__pid"))
-    val aboveLimit = allNodes(w.child).exists {
+    val aboveLimit = planNodes(w.child).exists {
       case _: GlobalLimitExec | _: TakeOrderedAndProjectExec => true
       case _ => false
     }
@@ -164,20 +150,20 @@ class GlobalWindowLintSpec extends SparkSpec {
     // entry here would be flagged stale
   )
 
-  /** The BNLJs in `plan` whose broadcast side is NOT a provably-1-row
+  /** The BNLJs in `df`'s plan whose broadcast side is NOT a provably-1-row
     * subtree. The only structural escape is a SCALAR aggregate
     * (groupingExpressions.isEmpty → exactly one output row) anywhere on the
     * broadcast side: the innermost such aggregate bounds everything above
     * it at 1 row. `nodeName.contains("Aggregate")` alone is NOT enough —
     * HashAggregateExec with grouping keys has unbounded cardinality. */
-  private def riskyBnljs(plan: SparkPlan): Seq[SparkPlan] = {
+  private def riskyBnljs(df: DataFrame): Seq[SparkPlan] = {
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    allNodes(plan)
+    planNodes(df.queryExecution.executedPlan)
       .collect { case b: BroadcastNestedLoopJoinExec => b }
       .filterNot { b =>
         val bc = if (b.buildSide.toString.contains("Right")) b.right else b.left
-        allNodes(bc).exists {
+        planNodes(bc).exists {
           case a: BaseAggregateExec => a.groupingExpressions.isEmpty
           case _ => false
         }
@@ -193,7 +179,7 @@ class GlobalWindowLintSpec extends SparkSpec {
     val bad = docs.join(
       org.apache.spark.sql.functions.broadcast(grouped),
       docs("id") > grouped("n"), "inner")
-    assert(riskyBnljs(finalPlan(bad)).nonEmpty,
+    assert(riskyBnljs(bad).nonEmpty,
       "grouped-aggregate broadcast must be flagged as risky")
     // scalar aggregate (1 row by construction) stays structurally allowed
     val scalar = docs.agg(
@@ -201,7 +187,7 @@ class GlobalWindowLintSpec extends SparkSpec {
     val ok = docs.join(
       org.apache.spark.sql.functions.broadcast(scalar),
       docs("id") > scalar("mx"), "inner")
-    assert(riskyBnljs(finalPlan(ok)).isEmpty,
+    assert(riskyBnljs(ok).isEmpty,
       "scalar-aggregate broadcast must remain structurally allowed")
   }
 
@@ -212,7 +198,7 @@ class GlobalWindowLintSpec extends SparkSpec {
       val df =
         try q.fn(spark, sfTiny)
         catch { case e: Throwable => fail(s"$name failed to build: $e") }
-      val risky = riskyBnljs(finalPlan(df))
+      val risky = riskyBnljs(df)
       if (risky.nonEmpty) {
         if (allowBnlj.contains(name)) unused -= name
         else offenders += s"$name (${risky.size} nested-loop join(s))"
@@ -349,7 +335,7 @@ class GlobalWindowLintSpec extends SparkSpec {
       val df =
         try q.fn(spark, sfTiny)
         catch { case e: Throwable => fail(s"$name failed to build: $e") }
-      val global = allNodes(finalPlan(df))
+      val global = planNodes(df.queryExecution.executedPlan)
         .collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
         .filterNot(boundedByConstruction)
       if (global.nonEmpty) {

@@ -30,12 +30,14 @@ class GraphExtraSpec extends SparkSpec {
     assert(GraphOps.adamicAdar(star, "a", "b", Some(3L), dec6).isEmpty)
   }
 
-  test("q322 runs at sf0.001 with AQE on and off, with equal results") {
+  test("q322 runs at sf0.001 and sf0.01 with AQE on and off, with equal results") {
     // degree-1 wedge centers: 1/ln(1) must never be evaluated (ANSI divide)
     val q = graft.queries.Registry.all("q322_adamic_adar")
-    val Seq(on, off) = Seq(true, false).map(aqe => withAqe(aqe)(q.fn(spark, sfTiny).collect().toSeq))
-    assert(on.nonEmpty)
-    assert(on == off)
+    Seq(sfTiny, "/root/testdata/sf0.01").foreach { sf =>
+      val Seq(on, off) = Seq(true, false).map(aqe => withAqe(aqe)(q.fn(spark, sf).collect().toSeq))
+      assert(on.nonEmpty, sf)
+      assert(on == off, sf)
+    }
   }
 
   test("k-core: pendant chain peels in cascade, the 4-clique survives k=3") {

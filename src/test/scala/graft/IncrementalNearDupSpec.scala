@@ -2,8 +2,6 @@ package graft
 
 import graft.operators.DedupOps
 import graft.sources.Bucketing
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -81,13 +79,6 @@ class IncrementalNearDupSpec extends SparkSpec {
     }
   }
 
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => p +: allNodes(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      p +: allNodes(q.plan)
-    case _ => p +: p.children.flatMap(allNodes)
-  }
-
   test("bucketed (band, bh) index: the incremental candidate join is exchange-free") {
     // the actual 100 TB rolling-crawl shape: the historical band index is
     // a parquet table bucketed by (band, bh); the day's batch bands are
@@ -117,7 +108,7 @@ class IncrementalNearDupSpec extends SparkSpec {
         .join(hIdx.select(col("doc_id").as("hist_id"), col("band"), col("bh")),
           Seq("band", "bh"))
         .select("batch_id", "hist_id")
-      val nShuffles = allNodes(joinOnly.queryExecution.executedPlan)
+      val nShuffles = planNodes(joinOnly.queryExecution.executedPlan)
         .count(_.isInstanceOf[ShuffleExchangeExec])
       assert(nShuffles == 0,
         s"bucketed band join must elide all exchanges:\n${joinOnly.queryExecution.executedPlan}")

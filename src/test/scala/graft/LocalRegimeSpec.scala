@@ -287,12 +287,21 @@ class LocalRegimeSpec extends SparkSpec {
         pageRankDist(e), onDriver = false)
     }
     // the distributed body divides by the zero out-weight: the public
-    // call must raise the same error, not return driver-side numbers
-    val dist = intercept[ArithmeticException](pageRankDist(zeroOut).collect())
-    val pub = intercept[ArithmeticException](
-      GraphOps.pageRank(zeroOut, "src", "dst", "w", 0.85, 4, dec6).collect())
-    def condition(e: Throwable) = e.asInstanceOf[SparkThrowable].getCondition
-    assert(condition(pub) == "DIVIDE_BY_ZERO" && condition(dist) == "DIVIDE_BY_ZERO")
+    // call must raise the same error, not return driver-side numbers.
+    // With AQE off the error comes from the broadcast future, wrapped in
+    // an ExecutionException, so the condition is read from the cause chain
+    def condition(e: Throwable): Option[String] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: SparkThrowable if t.getCondition != null => t.getCondition }
+    Seq(true, false).foreach { aqe =>
+      withAqe(aqe) {
+        val dist = intercept[Exception](pageRankDist(zeroOut).collect())
+        val pub = intercept[Exception](
+          GraphOps.pageRank(zeroOut, "src", "dst", "w", 0.85, 4, dec6).collect())
+        assert(condition(pub).contains("DIVIDE_BY_ZERO") &&
+          condition(dist).contains("DIVIDE_BY_ZERO"), s"AQE $aqe: $pub / $dist")
+      }
+    }
     assertSame("hits null id", GraphOps.hits(nullId, "src", "dst", "w", 3, dec6),
       GraphOps.hitsDistributed(GraphOps.mergedEdges(nullId, "src", "dst", "w"), 3,
         dec6, reliableEvery = 0), onDriver = false)

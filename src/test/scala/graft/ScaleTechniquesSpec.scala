@@ -140,30 +140,33 @@ class ScaleTechniquesSpec extends SparkSpec {
     // the runtime half of the skew story (SkewOps salting is the manual
     // half): one hot key owns ~99% of the fact side; with thresholds
     // scaled to fixture size, AQE's OptimizeSkewedJoin must split the hot
-    // partition instead of letting one task drag the stage
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-      val fact = spark.range(0, 200000).select(
-        when(col("id") % 100 =!= 0, lit(7L)).otherwise(col("id")).as("k"),
-        col("id").as("v"))
-      val dim = spark.range(0, 2000).select(col("id").as("k"), (col("id") * 2).as("w"))
-      val j = fact.join(dim, "k")
-      // execute THIS dataset's plan (count() builds its own QueryExecution,
-      // whose finalized AQE plan we could never see — observe() test note)
-      assert(j.collect().length > 0)
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true"),
-        s"AQE must mark the skewed join side:\n${plan.take(900)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    // partition instead of letting one task drag the stage. AQE is what
+    // is under test, so it is on here whatever the session profile says
+    withAqe(true) {
+      val saved = Seq(
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        .map(k => k -> spark.conf.getOption(k)).toMap
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
+        val fact = spark.range(0, 200000).select(
+          when(col("id") % 100 =!= 0, lit(7L)).otherwise(col("id")).as("k"),
+          col("id").as("v"))
+        val dim = spark.range(0, 2000).select(col("id").as("k"), (col("id") * 2).as("w"))
+        val j = fact.join(dim, "k")
+        // execute THIS dataset's plan (count() builds its own QueryExecution,
+        // whose finalized AQE plan we could never see — observe() test note)
+        assert(j.collect().length > 0)
+        val plan = j.queryExecution.executedPlan.toString
+        assert(plan.contains("skew=true"),
+          s"AQE must mark the skewed join side:\n${plan.take(900)}")
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
   }
 

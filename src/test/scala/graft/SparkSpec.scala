@@ -1,10 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session, UTC, small
-  * shuffle fan-out). */
+/** Shared local session for all suites: one JVM-wide `Bench.session` on
+  * `local[4]` with 4 shuffle partitions, so the suites run the profile the
+  * benchmark times (AQE off; specs that test AQE turn it on with
+  * [[withAqe]]). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfTiny = "/root/testdata/sf0.001"
@@ -16,6 +21,17 @@ trait SparkSpec extends AnyFunSuite {
     val was = spark.conf.get(key)
     spark.conf.set(key, on.toString)
     try f finally spark.conf.set(key, was)
+  }
+
+  /** Every node of a physical plan, descending into adaptive plans, query
+    * stages and reused exchanges — an AQE-off plan shows a repeated
+    * subtree only once, as the child of a `ReusedExchangeExec`, so a walk
+    * that stops there misses what the reuse runs. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => p +: planNodes(a.executedPlan)
+    case q: QueryStageExec => p +: planNodes(q.plan)
+    case r: ReusedExchangeExec => p +: planNodes(r.child)
+    case _ => p +: p.children.flatMap(planNodes)
   }
 
   /** Count the Spark jobs a thunk schedules, via the public
@@ -38,14 +54,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Bench.session(4)
 }

@@ -268,6 +268,31 @@ class StatOpsSpec extends SparkSpec {
     assert(math.abs(r.getDouble(5) - 7.0 / 3.0) < 1e-6)
   }
 
+  test("sequenceEntropyRate: one distinct state has no predictability (null, not a divide error)") {
+    def ts(sec: Int) = new Timestamp(1704067200000L + sec * 1000L)
+    // three events of one type: two a→a transitions, H = 0 and H_max = ln 1 = 0
+    val df = Seq((1L, ts(0), 1L, "a"), (1L, ts(5), 2L, "a"), (1L, ts(9), 3L, "a"))
+      .toDF("user_id", "ts", "event_id", "event_type")
+    val r = EventOps.sequenceEntropyRate(df, "user_id", "ts", "event_id",
+      "event_type", dec6).collect().head
+    assert(r.getLong(0) == 2L && r.getLong(1) == 1L)
+    assert(r.getDouble(2) == 0.0 && r.getDouble(3) == 0.0)
+    assert(r.isNullAt(4))
+  }
+
+  test("burstiness: all-zero gaps give null, not a divide error; a metronome gives -1") {
+    def ts(sec: Int) = new Timestamp(1704067200000L + sec * 1000L)
+    // key 1: three events at one instant (σ + μ = 0); key 2: gaps 4, 4, 4
+    val df = (Seq.fill(3)((1L, ts(7))) ++ Seq(0, 4, 8, 12).map(s => (2L, ts(s))))
+      .zipWithIndex.map { case ((k, t), i) => (k, t, i.toLong) }
+      .toDF("user_id", "ts", "event_id")
+    val out = EventOps.burstiness(df, "user_id", "ts", "event_id", dec6)
+      .orderBy("user_id").collect()
+    assert(out.map(_.getLong(1)).toSeq == Seq(2L, 3L))
+    assert(out(0).getDouble(2) == 0.0 && out(0).isNullAt(4))
+    assert(out(1).getDouble(2) == 4.0 && out(1).getDouble(4) == -1.0)
+  }
+
   test("allanVariance: a gap contributes no phantom pair") {
     def ts(h: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
     // hours 0,1,3,4 — bucket 2 missing → only pairs (0,1) and (3,4)
