@@ -15,25 +15,27 @@ import org.apache.spark.sql.types._
   *
   * Three physical regimes for the superstep operators (pageRank, hits,
   * bfsHops, kCore, labelPropagation, the Louvain sweep), picked per call:
-  *  - DRIVER-LOCAL: the operator builds and persists its merged edge
-  *    table, and one job counts it and collects it when it has at most
-  *    [[LocalEdgeLimit]] rows ([[LocalGraph.collectAtMost]]: about the
-  *    bound's worth of rows ships at most, whatever the table's size).
-  *    At or below the bound the supersteps run on the driver over a
-  *    [[LocalGraph]] (dense node index, CSR adjacency) with the same
-  *    semantics, and the result returns as a LocalRelation: no superstep,
-  *    probe or checkpoint job, and none at all until the result is
-  *    drained.
+  *  - DRIVER-LOCAL: the operator builds its merged edge table as a plan
+  *    that nothing persists, and one job runs it, counts it and collects
+  *    it when it has at most [[LocalEdgeLimit]] rows
+  *    ([[LocalGraph.collectAtMost]]: about the bound's worth of rows ships
+  *    at most, whatever the table's size). At or below the bound the
+  *    supersteps run on the driver over a [[LocalGraph]] (dense node
+  *    index, CSR adjacency) with the same semantics, and the result
+  *    returns as a LocalRelation: no superstep, probe, checkpoint or
+  *    cache job, nothing left cached, and no job at all until the result
+  *    is drained.
   *  - BROADCAST: above it, node-sized state of at most [[NodeLimit]]
   *    nodes enters the edge joins broadcast.
   *  - PARTITIONED: above both, every node-keyed join shuffles (the
   *    web-graph regime).
   *
-  * In the two distributed regimes each superstep checkpoints the
-  * node-sized state LAZILY (the fixed-horizon operators through
-  * [[Ckpt.iterate]], the data-dependent loops through [[Ckpt.step]] with
-  * `eager = false`): the blocks are written by the state's first
-  * consumer, and the persisted normalized edge table is reused — the
+  * In the two distributed regimes the body persists the edge table it
+  * iterates (the only place the table is read more than once), and each
+  * superstep checkpoints the node-sized state LAZILY (the fixed-horizon
+  * operators through [[Ckpt.iterate]], the data-dependent loops through
+  * [[Ckpt.step]] with `eager = false`): the blocks are written by the
+  * state's first consumer, and the persisted edge table is reused — the
   * Pregel execution model. A pure lazy plan is NOT an option there: the
   * rank vector feeds three consumers per step (dangling mass,
   * contribution join, next vector), so unmaterialized lineage grows
@@ -43,11 +45,12 @@ object GraphOps {
 
   /** Driver-local regime bound: a merged edge table of at most this many
     * rows is collected and iterated on the driver. 2^22, the
-    * [[DedupOps.nearDupClusters]] gate. The table arrives as Rows of boxed
-    * values: about 50 bytes per integral-id edge serialized (a long pair,
-    * measured in `LocalRegimeSpec`) and about 100 on the driver heap, so a
-    * few hundred MB at the bound, within the default 1 GB
-    * `spark.driver.maxResultSize`; string ids add their length. The
+    * [[DedupOps.nearDupClusters]] gate. The table arrives as UnsafeRows,
+    * about 40 bytes per integral-id edge serialized (a long pair, measured
+    * in `LocalRegimeSpec`), and becomes Rows of boxed values on the driver,
+    * about 100 bytes each, so a few hundred MB at the bound, within the
+    * default 1 GB `spark.driver.maxResultSize`; string ids add their
+    * length. The
     * supersteps' index arrays add a few tens of MB. A table above the
     * bound ships at most about the bound's worth of rows before the gate
     * rejects it ([[LocalGraph.collectAtMost]]). A graph over a vocabulary
@@ -67,22 +70,20 @@ object GraphOps {
   private def bc(on: Boolean)(df: DataFrame): DataFrame =
     if (on) broadcast(df) else df
 
-  /** The driver-local regime's gate over a persisted edge table `e` whose
-    * columns 0 and 1 are the endpoint ids: `run`'s result when `e` has at
-    * most [[LocalEdgeLimit]] rows (one job, which also fills `e`'s cache
-    * for the distributed body; see [[LocalGraph.collectAtMost]] for what
-    * it ships), the ids are non-null and of one
-    * [[LocalGraph.supports]]ed type, and `run` mirrors the case (it
-    * returns None for inputs whose distributed semantics it does not
-    * replay, e.g. a division by zero). `e` is released when the local
-    * result stands. */
+  /** The driver-local regime's gate over an edge table `e` whose columns
+    * 0 and 1 are the endpoint ids: `run`'s result when `e` has at most
+    * [[LocalEdgeLimit]] rows (one job over `e`'s plan, which is not
+    * persisted; see [[LocalGraph.collectAtMost]] for what it ships), the
+    * ids are non-null and of one [[LocalGraph.supports]]ed type, and `run`
+    * mirrors the case (it returns None for inputs whose distributed
+    * semantics it does not replay, e.g. a division by zero). Otherwise
+    * None, and the distributed body persists `e` itself. */
   private def onDriver(e: DataFrame)(run: Array[Row] => Option[DataFrame]): Option[DataFrame] = {
     val dt = e.schema(0).dataType
     if (!LocalGraph.supports(dt) || e.schema(1).dataType != dt) None
     else LocalGraph.collectAtMost(e, LocalEdgeLimit)
       .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
       .flatMap(run)
-      .map { out => e.unpersist(blocking = false); out }
   }
 
   /** The node column of an edge table: `a` and `b` stacked as "node"
@@ -92,14 +93,13 @@ object GraphOps {
     e.select(col(a).as("node")).unionByName(e.select(col(b).as("node")))
       .schema("node")
 
-  /** Parallel edges merged by weight sum into (src, dst, w), persisted:
-    * the edge table of [[pageRank]] and [[hits]]. */
+  /** Parallel edges merged by weight sum into (src, dst, w): the edge
+    * table of [[pageRank]] and [[hits]]. */
   private[graft] def mergedEdges(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String): DataFrame =
     edges
       .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
       .agg(sum(col(weightCol).cast("double")).as("w"))
-      .persist()
 
   /** Weighted PageRank by `iters` unrolled power-iteration steps:
     * r ← (1−d)/N + d·(Pᵀr + dangling/N), where P is the out-weight-
@@ -143,9 +143,6 @@ object GraphOps {
                reliableEvery: Int = 0): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1,
       s"bad pagerank params: iters=$iters damping=$damping")
-    // the merged edge table is the expensive subtree (it may sit on top
-    // of an arbitrary join pipeline): persisted, because the regime
-    // collect and every distributed consumer derive from it
     val e = mergedEdges(edges, srcCol, dstCol, weightCol)
     onDriver(e)(rows => pageRankLocal(e, rows, damping, iters, scoreOut))
       .getOrElse(pageRankDistributed(e, damping, iters, scoreOut, reliableEvery))
@@ -185,14 +182,17 @@ object GraphOps {
       }
     }
 
-  /** [[pageRank]]'s distributed body over the persisted merged edge table
-    * `e` (src, dst, w). `bcast` picks the path; None, what [[pageRank]]
-    * passes, probes |nodes| against [[NodeLimit]] (the count is needed as
-    * N either way). Only specs set it, to reach the scale path on small
-    * graphs. */
+  /** [[pageRank]]'s distributed body over the merged edge table `e`
+    * (src, dst, w), which it persists: the table may sit on top of an
+    * arbitrary join pipeline, and the out-weights, the normalized edges
+    * and the node table all read it. `bcast` picks the path; None, what
+    * [[pageRank]] passes, probes |nodes| against [[NodeLimit]] (the count
+    * is needed as N either way). Only specs set it, to reach the scale
+    * path on small graphs. */
   private[graft] def pageRankDistributed(e: DataFrame, damping: Double,
       iters: Int, scoreOut: Column => Column, reliableEvery: Int,
       bcast: Option[Boolean] = None): DataFrame = {
+    e.persist()
     val outw = e.groupBy("src").agg(sum("w").as("__ow"))
     // the per-step working set: read `iters` times
     val norm = e.join(outw, "src")
@@ -272,7 +272,7 @@ object GraphOps {
     *
     * Up to [[LocalEdgeLimit]] edges the frontier expands on the driver
     * ([[bfsLocal]]). Above it, [[bfsDistributed]] follows the Pregel
-    * discipline (the [[pageRank]] lesson): the edge set is persisted
+    * discipline (the [[pageRank]] lesson): it persists the edge set
     * once; per superstep the frontier expands through ONE equi-join, new
     * nodes are a LEFT ANTI against the visited set, and both frames go
     * through a lazy [[Ckpt.step]] so lineage stays O(1) instead of
@@ -299,14 +299,14 @@ object GraphOps {
   }
 
   /** [[bfsHops]]' edge table: (s, d) as longs, both orientations unless
-    * `directed`, deduped and persisted. */
+    * `directed`, deduped. */
   private[graft] def bfsEdges(edges: DataFrame, srcCol: String, dstCol: String,
                               directed: Boolean): DataFrame = {
     val e0 = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("d"))
     (if (directed) e0
      else e0.union(e0.select(col("d").as("s"), col("s").as("d"))))
-      .distinct().persist()
+      .distinct()
   }
 
   /** [[bfsHops]] on the driver over the collected edge table: hop by hop,
@@ -340,10 +340,11 @@ object GraphOps {
       StructField("hop", IntegerType, nullable = false))))
   }
 
-  /** [[bfsHops]]' distributed body over the persisted edge table `e`
-    * (s, d) of [[bfsEdges]]. */
+  /** [[bfsHops]]' distributed body over the edge table `e` (s, d) of
+    * [[bfsEdges]], which it persists for the hops and releases after. */
   private[graft] def bfsDistributed(e: DataFrame, seeds: Seq[Long],
                                     maxHops: Int, reliableEvery: Int): DataFrame = {
+    e.persist()
     val spark = e.sparkSession
     import spark.implicits._
     var visited = seeds.toDF("node").withColumn("hop", lit(0))
@@ -559,12 +560,14 @@ object GraphOps {
       }
     }
 
-  /** [[hits]]'s distributed body over the persisted merged edge table `e`
-    * (src, dst, w). `bcast` picks the regime; None, what [[hits]] passes,
-    * probes |nodes| against [[NodeLimit]]. Only specs set it. */
+  /** [[hits]]'s distributed body over the merged edge table `e` (src,
+    * dst, w), which it persists: every iteration joins it twice. `bcast`
+    * picks the regime; None, what [[hits]] passes, probes |nodes| against
+    * [[NodeLimit]]. Only specs set it. */
   private[graft] def hitsDistributed(e: DataFrame, iters: Int,
       scoreOut: Column => Column, reliableEvery: Int,
       bcast: Option[Boolean] = None): DataFrame = {
+    e.persist()
     val nodeTab = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct().persist()
     val on = bcast.getOrElse(nodeTab.count() <= NodeLimit)
@@ -677,7 +680,7 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
                        iters: Int, reliableEvery: Int = 0): DataFrame = {
     require(iters >= 1 && iters <= 20, s"1 <= iters <= 20, got $iters")
-    val canon = canonEdges(edges, aCol, bCol).persist()
+    val canon = canonEdges(edges, aCol, bCol)
     onDriver(canon)(rows => Some(labelPropagationLocal(canon, rows, iters)))
       .getOrElse(labelPropagationDistributed(canon, iters, reliableEvery))
   }
@@ -713,10 +716,11 @@ object GraphOps {
       StructType(Seq(node.copy(name = "node"), node.copy(name = "label"))))
   }
 
-  /** [[labelPropagation]]'s distributed body over the persisted canonical
-    * edge table `canon` (u < v). */
+  /** [[labelPropagation]]'s distributed body over the canonical edge
+    * table `canon` (u < v), which it persists: both orientations read it. */
   private[graft] def labelPropagationDistributed(canon: DataFrame, iters: Int,
                                                  reliableEvery: Int): DataFrame = {
+    canon.persist()
     val sym = symmetric(canon).persist()
     val nodes = sym.select(col("u").as("node")).distinct().persist()
     val bcast = nodes.count() <= NodeLimit
@@ -773,17 +777,19 @@ object GraphOps {
                       rounds: Int, topK: Int, scoreOut: Column => Column,
                       reliableEvery: Int = 0): DataFrame = {
     require(rounds >= 1 && rounds <= 10, s"1 <= rounds <= 10, got $rounds")
-    val canon = canonEdges(edges, aCol, bCol).persist()
+    val canon = canonEdges(edges, aCol, bCol)
     onDriver(canon)(rows =>
         louvainLocal(canon, rows, rounds, topK, scoreOut, multiLevel = false))
       .getOrElse(louvainOneLevelDistributed(canon, rounds, topK, scoreOut,
         reliableEvery))
   }
 
-  /** [[louvainOneLevel]]'s distributed body over the persisted canonical
-    * edge table `canon` (u < v). */
+  /** [[louvainOneLevel]]'s distributed body over the canonical edge table
+    * `canon` (u < v), which it persists: the sweep and the summary read
+    * it. */
   private[graft] def louvainOneLevelDistributed(canon: DataFrame, rounds: Int,
       topK: Int, scoreOut: Column => Column, reliableEvery: Int): DataFrame = {
+    canon.persist()
     val (labels, bcast) = louvainSweepW(canon.withColumn("w", lit(1.0)),
       rounds, scoreOut, reliableEvery, roundOffset = 0)
     val (comm, qRow) = communitySummary(canon, labels, bcast)
@@ -828,17 +834,19 @@ object GraphOps {
                         rounds: Int, topK: Int, scoreOut: Column => Column,
                         reliableEvery: Int = 0): DataFrame = {
     require(rounds >= 1 && rounds <= 10, s"1 <= rounds <= 10, got $rounds")
-    val canon = canonEdges(edges, aCol, bCol).persist()
+    val canon = canonEdges(edges, aCol, bCol)
     onDriver(canon)(rows =>
         louvainLocal(canon, rows, rounds, topK, scoreOut, multiLevel = true))
       .getOrElse(louvainMultiLevelDistributed(canon, rounds, topK, scoreOut,
         reliableEvery))
   }
 
-  /** [[louvainMultiLevel]]'s distributed body over the persisted canonical
-    * edge table `canon` (u < v). */
+  /** [[louvainMultiLevel]]'s distributed body over the canonical edge
+    * table `canon` (u < v), which it persists: both levels' sweeps,
+    * contraction and summaries read it. */
   private[graft] def louvainMultiLevelDistributed(canon: DataFrame, rounds: Int,
       topK: Int, scoreOut: Column => Column, reliableEvery: Int): DataFrame = {
+    canon.persist()
     val spark = canon.sparkSession
     val (l1u, bcast) = louvainSweepW(canon.withColumn("w", lit(1.0)), rounds,
       scoreOut, reliableEvery, roundOffset = 0)
@@ -1422,7 +1430,7 @@ object GraphOps {
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
             maxRounds: Int = 50, reliableEvery: Int = 0): DataFrame = {
     require(k >= 1, s"k >= 1, got $k")
-    val canon = canonEdges(edges, aCol, bCol).persist()
+    val canon = canonEdges(edges, aCol, bCol)
     onDriver(canon)(rows => Some(kCoreLocal(canon, rows, k, maxRounds)))
       .getOrElse(kCoreDistributed(canon, k, maxRounds, reliableEvery))
   }
@@ -1461,10 +1469,12 @@ object GraphOps {
       StructType(Seq(node, StructField("degree", LongType, nullable = false))))
   }
 
-  /** [[kCore]]'s distributed body over the persisted canonical edge table
-    * `canon` (u < v). */
+  /** [[kCore]]'s distributed body over the canonical edge table `canon`
+    * (u < v), which it persists: the first degree count and the first
+    * peel read it. */
   private[graft] def kCoreDistributed(canon: DataFrame, k: Int, maxRounds: Int,
                                       reliableEvery: Int): DataFrame = {
+    canon.persist()
     var e = canon
     var keepCount = -1L
     var round = 1

@@ -32,7 +32,12 @@ import graft.sources.Tables
   * The NTZ→timestamp normalization is only bit-identical under a UTC
   * session, so the spec also asserts the shared session's timezone — a
   * non-UTC box would shift every events timestamp against the DuckDB
-  * oracle (ADVICE r5). */
+  * oracle (ADVICE r5).
+  *
+  * `Tables` resolves each table once per session, so the spec also pins
+  * that cache: a table rewritten mid-session in another layout reads as
+  * its new rows, a second read schedules no job, and a new session
+  * resolves afresh. */
 class EventsLoaderContractSpec extends SparkSpec {
 
   // canonical content: micros timestamps, plus sub-microsecond residue in
@@ -58,7 +63,8 @@ class EventsLoaderContractSpec extends SparkSpec {
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
   }
 
-  private def writeLayoutC(dir: String): Unit = {
+  private def writeLayoutC(dir: String,
+                           rows: Seq[(Long, Long, Long, String, Double, String)] = rows): Unit = {
     val schema: MessageType = Types.buildMessage()
       .required(INT64).named("event_id")
       .required(INT64)
@@ -124,5 +130,41 @@ class EventsLoaderContractSpec extends SparkSpec {
     load(s"$base/c")
     assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
       .forall(_ == "false"))
+  }
+
+  test("rewriting events.parquet mid-session from layout A to C re-resolves the table") {
+    val base = Files.createTempDirectory("events-rewrite").toFile
+    base.deleteOnExit()
+    val dir = base.getPath
+    writeLayoutA(dir)
+    assert(load(dir).map(_.getLong(0)) === Seq(1L, 2L, 3L))
+    // a different layout AND different content, at the same path
+    val later = rows.map { case (id, us, u, t, v, p) => (id + 10, us + 5L, u, t, v * 2, p) }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/events.parquet"))
+    writeLayoutC(dir, later)
+    val got = load(dir)
+    assert(got.map(_.getLong(0)) === Seq(11L, 12L, 13L))
+    assert(got.map(_.getTimestamp(1).toInstant) === later.map { case (_, us, _, _, _, _) =>
+      java.time.Instant.EPOCH.plusNanos(us * 1000L) })
+    assert(got.map(_.getDouble(4)) === later.map(_._5))
+    assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
+      .forall(_ == "false"))
+  }
+
+  test("a table resolves once per session: a second read schedules no job") {
+    Tables.orders(spark, sfTiny)
+    assert(jobsIn("tables-second-read")(Tables.orders(spark, sfTiny)) == 0)
+    // each read has its own column ids, so a table joins with itself
+    val (a, b) = (Tables.nation(spark, sfTiny), Tables.nation(spark, sfTiny))
+    assert(a.join(b, a("n_nationkey") === b("n_regionkey")).count() ==
+      a.count())
+  }
+
+  test("a new session resolves its tables afresh") {
+    Tables.orders(spark, sfTiny)
+    val other = spark.newSession()
+    // schema inference is a job; the first session's relation is not reused
+    assert(jobsIn("tables-new-session")(Tables.orders(other, sfTiny)) > 0)
+    assert(jobsIn("tables-new-session-again")(Tables.orders(other, sfTiny)) == 0)
   }
 }

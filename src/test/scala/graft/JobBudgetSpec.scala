@@ -7,30 +7,30 @@ import graft.queries.Registry
   * while the DataFrame is built, so their cost is dominated by job
   * count. A query's count is the jobs one
   * build + collect schedules (construction and drain), the smaller of two
-  * such runs: AQE's stage submission occasionally adds or saves one job
-  * (seen on q233 and q327), and a change that really adds a job adds it
-  * to both runs.
+  * such runs: the first may infer table schemas, AQE's stage submission
+  * occasionally adds or saves one job (seen on q233 and q327), and a
+  * change that really adds a job adds it to both runs.
   *
   * A budget is the highest count measured over the runs of the code it
-  * was pinned on. The graph family's budgets dropped to its
-  * driver-local regime's counts (q233 43 → 16, q287 25 → 9, q306 41 → 8,
-  * q323 26 → 10, q327 38 → 9, q330 25 → 10, q337 50 → 10, q347 73 → 10):
-  * what remains is the edge pipeline, the one collect that picks the
-  * regime, and the drain. Budgets may only TIGHTEN: lower one when a
+  * was pinned on. `Tables` resolves each table once per session, so the
+  * second run infers no schema, and the graph family takes its
+  * driver-local regime: what remains is the edge pipeline's broadcast
+  * and shuffle jobs, the one collect that picks the regime, and the
+  * drain. Budgets may only TIGHTEN: lower one when a
   * change saves jobs, never raise one to make a change pass. Test names
   * leave the budget out, so tightening one keeps its test's name. */
 class JobBudgetSpec extends SparkSpec {
 
   private val budgets = Seq(
-    "q153_ann_recall" -> 13,
-    "q233_trade_pagerank" -> 16,
-    "q287_bfs_reach" -> 9,
-    "q306_hits" -> 8,
-    "q323_kcore" -> 10,
-    "q327_textrank" -> 9,
-    "q330_label_propagation" -> 10,
-    "q337_louvain" -> 10,
-    "q347_louvain_multilevel" -> 10)
+    "q153_ann_recall" -> 6,
+    "q233_trade_pagerank" -> 7,
+    "q287_bfs_reach" -> 4,
+    "q306_hits" -> 3,
+    "q323_kcore" -> 4,
+    "q327_textrank" -> 3,
+    "q330_label_propagation" -> 4,
+    "q337_louvain" -> 4,
+    "q347_louvain_multilevel" -> 4)
 
   budgets.foreach { case (name, budget) =>
     test(s"$name stays within its job budget at sf0.001") {

@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.LongType
   * take the local regime (its plan reads only local relations); both
   * sides must have the same schema, identical integral and string
   * values, and doubles within 1e-12 that are identical after dec6. Also
-  * the regime gate itself ([[LocalGraph.collectAtMost]]), the public
-  * calls that fall back to the distributed bodies, and the weighted
-  * Louvain sweep of the multi-level operator's large level 2. */
+  * the regime gate itself ([[LocalGraph.collectAtMost]]), that the local
+  * regime persists nothing, the public calls that fall back to the
+  * distributed bodies, and the weighted Louvain sweep of the multi-level
+  * operator's large level 2. */
 class LocalRegimeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -74,8 +75,10 @@ class LocalRegimeSpec extends SparkSpec {
       GraphOps.bfsDistributed(GraphOps.bfsEdges(e, s, d, directed), seeds,
         maxHops, reliableEvery = 0))
 
+  // unpersisted, as the public calls pass it: each distributed body
+  // persists the edge table it iterates
   private def canon(e: DataFrame, a: String, b: String) =
-    GraphOps.canonEdges(e, a, b).persist()
+    GraphOps.canonEdges(e, a, b)
 
   private def kCore(what: String, e: DataFrame, a: String, b: String, k: Int,
                     maxRounds: Int = 50): Unit =
@@ -201,6 +204,21 @@ class LocalRegimeSpec extends SparkSpec {
     louvain("q337/q347", coAct, "ua", "ub", 4, 20, dec6)
   }
 
+  test("the local regime leaves no cached plan and no persistent RDD behind") {
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Seq("q233_trade_pagerank", "q287_bfs_reach", "q306_hits", "q323_kcore",
+        "q330_label_propagation", "q347_louvain_multilevel").foreach { q =>
+      val df = graft.queries.Registry.all(q).fn(spark, sfTiny)
+      assert(df.queryExecution.analyzed.collectLeaves()
+        .exists(_.isInstanceOf[LocalRelation]), s"$q: not the driver-local regime")
+      df.collect()
+      assert(spark.sharedState.cacheManager.isEmpty, s"$q left a cached plan")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        s"$q left a persistent RDD")
+    }
+  }
+
   /** The bytes the tasks of the jobs `f` runs send back to the driver
     * (their serialized results), and those jobs' count. */
   private def shipped(f: => Unit): (Long, Int) = {
@@ -247,6 +265,9 @@ class LocalRegimeSpec extends SparkSpec {
     // every row shipped the same way
     assert(gate * 20 < all, s"the gate shipped $gate bytes, all rows $all")
     info(s"the gate shipped $gate bytes, all rows $all (${all / 128000} per row)")
+    // the gate's own encoding of every row: UnsafeRows
+    val (unsafe, _) = shipped { LocalGraph.collectAtMost(df, 1L << 40) }
+    info(s"all rows through the gate $unsafe (${unsafe / 128000} per row)")
     df.unpersist()
   }
 
