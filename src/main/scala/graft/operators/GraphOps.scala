@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * framework). Companion to the star-contraction connected components in
   * [[DedupOps]].
   *
-  * Three physical regimes for the superstep operators (pageRank, hits,
+  * Two physical regimes for the superstep operators (pageRank, hits,
   * bfsHops, kCore, labelPropagation, the Louvain sweep), picked per call:
   *  - DRIVER-LOCAL: the operator builds its merged edge table as a plan
   *    that nothing persists, and one job runs it, counts it and collects
@@ -25,12 +25,14 @@ import org.apache.spark.sql.types._
   *    returns as a LocalRelation: no superstep, probe, checkpoint or
   *    cache job, nothing left cached, and no job at all until the result
   *    is drained.
-  *  - BROADCAST: above it, node-sized state of at most [[NodeLimit]]
-  *    nodes enters the edge joins broadcast.
-  *  - PARTITIONED: above both, every node-keyed join shuffles (the
-  *    web-graph regime).
+  *  - DISTRIBUTED: above it, one body shape per operator. Its node-sized
+  *    state enters the node-keyed joins with a broadcast hint while the
+  *    graph has at most [[NodeLimit]] nodes; above that every such join
+  *    shuffles (the web-graph regime). The hint is the only difference
+  *    (HITS alone keeps a second normalizer shape, see
+  *    [[hitsDistributed]]).
   *
-  * In the two distributed regimes the body persists the edge table it
+  * In the distributed regime the body persists the edge table it
   * iterates (the only place the table is read more than once), and each
   * superstep checkpoints the node-sized state LAZILY (the fixed-horizon
   * operators through [[Ckpt.iterate]], the data-dependent loops through
@@ -58,15 +60,16 @@ object GraphOps {
     * always land here. */
   val LocalEdgeLimit: Long = 1L << 22
 
-  /** Broadcast-regime bound: node-sized state of at most this many nodes
-    * rides the edge joins broadcast. */
+  /** Broadcast-hint bound: the distributed bodies hint node-sized state
+    * of at most this many nodes broadcast into their joins. */
   val NodeLimit: Long = 1000000L
 
   /** Super-edge bound of [[louvainMultiLevel]]'s driver-side level-2
     * sweep ([[seqLocalMoving]]); above it level 2 runs as a sweep. */
   private val SeqEdgeLimit: Long = 1000000L
 
-  /** `broadcast(df)` in the broadcast regime, `df` otherwise. */
+  /** `broadcast(df)` when `on` (node-sized state within [[NodeLimit]]),
+    * `df` otherwise. */
   private def bc(on: Boolean)(df: DataFrame): DataFrame =
     if (on) broadcast(df) else df
 
@@ -113,22 +116,14 @@ object GraphOps {
     * rank vector, and one dst-keyed sum. Parallel edges are pre-merged
     * so the transition weights are well-defined.
     *
-    * Three regimes (see the header): up to [[LocalEdgeLimit]] merged
-    * edges the iteration runs on the driver ([[pageRankLocal]]); above
-    * it [[pageRankDistributed]] switches on |nodes| vs [[NodeLimit]]:
-    *  - FAST PATH (|nodes| ≤ NodeLimit): the rank vector lives in ONE
-    *    partition and enters every join broadcast — the only shuffle per
-    *    superstep is the dst-keyed contribution sum. Right for the
-    *    node-sized-state-fits-in-an-executor regime.
-    *  - SCALE PATH (|nodes| > NodeLimit, the web-graph regime): the vector
-    *    stays hash-partitioned by node and the joins shuffle — no
-    *    per-iteration broadcast of a multi-GB vector, no one-partition
-    *    checkpoint bottleneck. Each superstep's output is already
-    *    node-partitioned (the node-keyed join fixes the distribution),
-    *    so the checkpoint preserves it and the next step's node-keyed
-    *    joins reuse the partitioning without an extra exchange.
-    * The distributed body's one node-count aggregate picks the path, and
-    * its collected value doubles as the literal N everywhere.
+    * Two regimes (see the header): up to [[LocalEdgeLimit]] merged edges
+    * the iteration runs on the driver ([[pageRankLocal]]); above it
+    * [[pageRankDistributed]] runs [[pageRankStep]] per superstep, with
+    * the node-sized rank vector and contribution sums hinted broadcast
+    * while |nodes| ≤ [[NodeLimit]] and hash-partitioned by node above it
+    * (no per-iteration broadcast of a multi-GB vector). The body's one
+    * node-count aggregate picks the hint, and its collected value doubles
+    * as the literal N everywhere.
     *
     * Fault tolerance: `reliableEvery` — see [[Ckpt.iterate]] (default 0 =
     * every superstep localCheckpoints lazily; set k > 0 plus a
@@ -185,10 +180,10 @@ object GraphOps {
   /** [[pageRank]]'s distributed body over the merged edge table `e`
     * (src, dst, w), which it persists: the table may sit on top of an
     * arbitrary join pipeline, and the out-weights, the normalized edges
-    * and the node table all read it. `bcast` picks the path; None, what
-    * [[pageRank]] passes, probes |nodes| against [[NodeLimit]] (the count
-    * is needed as N either way). Only specs set it, to reach the scale
-    * path on small graphs. */
+    * and the node table all read it. `bcast` picks the broadcast hint;
+    * None, what [[pageRank]] passes, probes |nodes| against [[NodeLimit]]
+    * (the count is needed as N either way). Only specs set it, to plan
+    * the unhinted joins on small graphs. */
   private[graft] def pageRankDistributed(e: DataFrame, damping: Double,
       iters: Int, scoreOut: Column => Column, reliableEvery: Int,
       bcast: Option[Boolean] = None): DataFrame = {
@@ -208,36 +203,27 @@ object GraphOps {
     // iterative job-count floor was the measured cost, q233 scaling 0.48)
     val srcSet = norm.select(col("src").as("node")).distinct()
       .withColumn("__has", lit(1))
-    // ONE aggregate job whose value serves both the regime decision and
-    // the literal N
+    // ONE aggregate job whose value serves both the hint and the literal N
     val n = nodeTab.agg(count(lit(1)).cast("double")).first().getDouble(0)
     val bcastRank = bcast.getOrElse(n <= NodeLimit)
     val rank0 = nodeTab.join(bc(bcastRank)(srcSet), Seq("node"), "left")
       .select(col("node"), lit(1.0 / n).as("r"), lit(n).as("__N"),
         col("__has").isNull.as("__dang"))
-    // the fast path keeps the vector in ONE partition; the scale path
-    // keeps the node-keyed join's partitioning
-    def shaped(df: DataFrame): DataFrame = if (bcastRank) df.coalesce(1) else df
-    val rank = Ckpt.iterate(shaped(rank0), 1 to iters, reliableEvery) {
-      (r, _) => shaped(pageRankStep(norm, r, damping, bcastRank))
+    val rank = Ckpt.iterate(rank0, 1 to iters, reliableEvery) {
+      (r, _) => pageRankStep(norm, r, damping, bcastRank)
     }
     rank.select(col("node"), scoreOut(col("r")).as("rank"))
   }
 
   /** One PageRank superstep (pre-checkpoint), exposed so GraphOpsSpec can
-    * pin BOTH plan shapes: `bcastRank=true` broadcasts the node-sized
-    * vector into the edge join and computes the dangling mass as a
-    * frame-local window over the ONE-partition state (bounded by the
-    * regime: |nodes| ≤ NodeLimit — no separate aggregate job, no
-    * 1-row crossjoin build per superstep); `bcastRank=false` leaves every
-    * node-keyed join to shuffle and the dangling mass as the scalar
-    * aggregate + 1-row crossjoin — no broadcast of the rank vector
-    * anywhere, no partition-less window over unbounded data.
+    * pin its plan: the dangling mass is a scalar aggregate crossed back
+    * as a 1-row literal (never a partition-less window over the rank
+    * vector), and `bcastRank` only hints the node-sized vector into the
+    * edge join and the contribution sums into the state join; false
+    * leaves both to shuffle.
     *
     * The state carries `__dang` (static no-out-edge flag, attached once in
-    * [[pageRank]]), so neither regime re-joins the src set per superstep.
-    * Summation order of the dangling mass is unchanged in both regimes:
-    * the filter/`when` both reduce the state's rows left-to-right. */
+    * [[pageRankDistributed]]), so no superstep re-joins the src set. */
   private[graft] def pageRankStep(norm: DataFrame,
       rank: DataFrame, damping: Double, bcastRank: Boolean): DataFrame = {
     val contrib = norm
@@ -245,18 +231,10 @@ object GraphOps {
         col("src") === col("node"))
       .groupBy(col("dst").as("node"))
       .agg(sum(col("r") * col("p")).as("__cin"))
-    val withDm =
-      if (bcastRank)
-        rank.select(col("node"), col("__N"), col("__dang"),
-          coalesce(sum(when(col("__dang"), col("r")))
-            .over(Window.partitionBy()), lit(0.0)).as("__dm"))
-      else {
-        val dangling = rank.filter(col("__dang"))
-          .agg(coalesce(sum("r"), lit(0.0)).as("__dm"))
-        rank.select(col("node"), col("__N"), col("__dang"))
-          .crossJoin(dangling)
-      }
-    withDm
+    val dangling = rank.filter(col("__dang"))
+      .agg(coalesce(sum("r"), lit(0.0)).as("__dm"))
+    rank.select(col("node"), col("__N"), col("__dang"))
+      .crossJoin(dangling)
       .join(bc(bcastRank)(contrib), Seq("node"), "left")
       .select(col("node"),
         (lit(1.0 - damping) / col("__N") + lit(damping) *
@@ -499,11 +477,12 @@ object GraphOps {
     * Same regimes as [[pageRank]]: up to [[LocalEdgeLimit]] merged edges
     * the steps run on the driver ([[hitsLocal]]); above it
     * [[hitsDistributed]] runs each iteration as one src-keyed and one
-    * dst-keyed edge⋈vector equi-join plus a scalar normalizer, with
+    * dst-keyed edge⋈vector equi-join plus an L1 normalizer, with
     * node-sized vectors lazily checkpointed per step by [[Ckpt.iterate]]
-    * (O(1) lineage, `reliableEvery` for durable snapshots), broadcast
-    * into the edge joins while |nodes| ≤ [[NodeLimit]] and
-    * hash-partitioned above it.
+    * (O(1) lineage, `reliableEvery` for durable snapshots), hinted
+    * broadcast into the edge joins while |nodes| ≤ [[NodeLimit]] and
+    * hash-partitioned above it. Unlike the other operators, the hint
+    * also picks the normalizer's shape (see [[hitsDistributed]]).
     *
     * Returns (node, hub, authority), each column summing to 1; nodes
     * with no out-edges (resp. in-edges) score 0 on that side. */
@@ -562,8 +541,8 @@ object GraphOps {
 
   /** [[hits]]'s distributed body over the merged edge table `e` (src,
     * dst, w), which it persists: every iteration joins it twice. `bcast`
-    * picks the regime; None, what [[hits]] passes, probes |nodes| against
-    * [[NodeLimit]]. Only specs set it. */
+    * picks the broadcast hint and the normalizer; None, what [[hits]]
+    * passes, probes |nodes| against [[NodeLimit]]. Only specs set it. */
   private[graft] def hitsDistributed(e: DataFrame, iters: Int,
       scoreOut: Column => Column, reliableEvery: Int,
       bcast: Option[Boolean] = None): DataFrame = {
@@ -571,14 +550,14 @@ object GraphOps {
     val nodeTab = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct().persist()
     val on = bcast.getOrElse(nodeTab.count() <= NodeLimit)
-    // normalizer: in the broadcast regime the vector is node-bounded and
-    // about to be coalesced to ONE partition anyway, so the L1 total is a
-    // frame-local window over that single partition — no per-iteration
-    // scalar-aggregate job + 1-row crossjoin broadcast build (r13
-    // job-count-floor cut; same left-to-right summation over the same
-    // single-partition row order as the aggregate it replaces). The scale
-    // path keeps the scalar aggregate + crossjoin — never a partition-less
-    // window over an unbounded vector.
+    // normalizer: within NodeLimit the vector is node-bounded, so it is
+    // coalesced to ONE partition and the L1 total is a frame-local window
+    // over it; above NodeLimit, the scalar aggregate + 1-row crossjoin
+    // (never a partition-less window over an unbounded vector). The only
+    // measured fork in the distributed bodies: at 5M edges over 400k
+    // nodes, 4 iterations took 27 s this way against 50 s with the
+    // aggregate + crossjoin and the same hinted joins (medians of 5
+    // interleaved pairs, plans/graph_regimes/).
     def l1norm(raw: DataFrame, c: String): DataFrame =
       if (on)
         raw.select(col("node"),
@@ -674,8 +653,9 @@ object GraphOps {
     * equi-join + one (node, label) count + one per-node argmax window —
     * all keyed on node ids, state is node-sized and lazily checkpointed
     * per superstep by [[Ckpt.iterate]] (the Pregel discipline). The label
-    * state enters the edge join broadcast while |nodes| ≤ [[NodeLimit]]
-    * (the edge table is never shuffled); above it the join shuffles.
+    * state is hinted broadcast into the edge join while |nodes| ≤
+    * [[NodeLimit]] (the edge table is never shuffled); above it the join
+    * shuffles. The hint is the only difference between the two.
     * Returns (node, label) — nodes sharing a label are one community. */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
                        iters: Int, reliableEvery: Int = 0): DataFrame = {
@@ -766,9 +746,11 @@ object GraphOps {
     * shape: per round one label-keyed Σ_tot aggregate, one edge-shaped
     * neighbor-community count, a full-outer candidate union, and a
     * per-node argmax window — all partitioned by node or label, nothing
-    * corpus-global except the scalar edge-count m. Labels are lazily
-    * checkpointed per round by [[Ckpt.iterate]] (the Pregel discipline,
-    * with the `reliableEvery` durable-checkpoint contract).
+    * corpus-global except the scalar edge-count m; the node-sized frames
+    * are hinted broadcast while |nodes| ≤ [[NodeLimit]]
+    * ([[louvainRound]]). Labels are lazily checkpointed per round by
+    * [[Ckpt.iterate]] (the Pregel discipline, with the `reliableEvery`
+    * durable-checkpoint contract).
     *
     * Returns the `topK` communities by size:
     * (community, n_nodes, n_internal, sigma_tot, modularity) —
@@ -874,28 +856,23 @@ object GraphOps {
     // `SeqEdgeLimit` super-edges it is collected and swept with Blondel's
     // SEQUENTIAL local moving (ascending-id node order, dec6-rounded
     // gains, community-id tiebreak, move only on strict improvement →
-    // every accepted move raises Q, monotone by construction). Beyond
-    // the limit the distributed parity sweep runs with a keep-best
-    // guard; either way Q(l2) ≥ Q(l1) is a guarantee, not a hope.
-    val nSuper = superE.count()
-    val l2 =
-      if (nSuper <= SeqEdgeLimit) {
-        val triples = superE.collect().map(r =>
-          (r.get(0), r.get(1), r.getDouble(2)))
-        val moved = seqLocalMoving(triples, rounds)
+    // every accepted move raises Q, monotone by construction); one job
+    // collects it through the driver-local gate, and fills the cache the
+    // sweep reads when the gate refuses. Beyond the limit the
+    // distributed parity sweep runs with a keep-best guard; either way
+    // Q(l2) ≥ Q(l1) is a guarantee, not a hope.
+    val l2 = LocalGraph.collectAtMost(superE, SeqEdgeLimit) match {
+      case Some(rows) =>
+        val moved = seqLocalMoving(
+          rows.map(r => (r.get(0), r.get(1), r.getDouble(2))), rounds)
         val labType = l1.schema("label").dataType
-        val schema = StructType(Seq(StructField("node", labType),
-          StructField("label", labType)))
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            moved.toSeq.map { case (a, b) => Row(a, b) }, 1),
-          schema)
-      } else
+        LocalGraph.frame(spark, moved.toSeq.map { case (a, b) => Row(a, b) },
+          StructType(Seq(StructField("node", labType),
+            StructField("label", labType))))
+      case None =>
         louvainSweepW(superE, rounds, scoreOut, reliableEvery,
           roundOffset = rounds)._1
-    // the community-sized level-2 relabeling rides the regime broadcast
-    // (its 1-partition createDataFrame lineage has no stats, so unhinted
-    // the compose join plans as a full SortMergeJoin — r13b)
+    }
     val composed = l1.select(col("node"), col("label").as("__c1"))
       .join(bc(bcast)(l2.select(col("node").as("__c1"), col("label"))), "__c1")
       .select(col("node"), col("label"))
@@ -1223,52 +1200,32 @@ object GraphOps {
     // edge at level 1; contraction weights are edge counts), so the
     // double sum is exact up to 2^53 — the same value the unrolled
     // oracle's mm.m scalar computes.
-    // ... and it rides the SAME driver action as the broadcast-regime
+    // ... and it rides the SAME driver action as the broadcast hint's
     // node count (two 1-row aggregates crossjoined — the communitySummary
     // q1/q2 trick): one scheduler job where r13 had two (m probe + count)
     val probeRow = canonW.agg(sum("w").as("m"))
       .crossJoin(nodes.agg(count(lit(1)).as("__n"))).first()
     val mVal = probeRow.getDouble(0)
-    // Broadcast regime (the [[pageRank]] convention): the label state is
-    // node-sized; when it fits an executor, shipping it into the edge
-    // join broadcast beats shuffling the edge table — one count on the
+    // The broadcast hint (the [[pageRank]] convention): the label state
+    // is node-sized; when it fits an executor, shipping it into the edge
+    // join broadcast beats shuffling the edge table — the count on the
     // persisted node table decides. Above the limit every node-keyed
-    // join shuffles (web-scale regime), exactly as before.
+    // join shuffles (web-scale regime).
     val bcast = probeRow.getLong(1) <= NodeLimit
     // the label state CARRIES the node's static weighted degree: the
     // per-round Σ_tot aggregate and the gain scoring read it off the
     // state instead of re-joining the degree table every round (two
     // node-keyed joins per round removed — post-localCheckpoint the
     // node-sized state has no stats and those joins planned as full
-    // SortMergeJoins)
-    // BROADCAST-REGIME state additionally carries its label's Σ_tot,
-    // recomputed by one label-keyed window at checkpoint time (exact:
-    // every deg is integral, so the double sum is order-independent up
-    // to 2^53 — the same value the former per-round aggregate produced).
-    // Each round then needs exactly ONE broadcast build (the plain
-    // state): the neighbor join delivers the candidate community's
-    // Σ_tot for free, the stay row carries its own, and the former
-    // per-round Σ_tot broadcast + act-join broadcast are gone (r13b:
-    // the broadcast-build job floor was the measured scheduler cost).
-    // The SCALE regime keeps the aggregate+join shape: a window
-    // partitioned by label cannot partially aggregate, so one
-    // mega-community would pin a single task at web scale.
-    val labT = nodes.schema("node").dataType
-    def withStot(st: DataFrame): DataFrame =
-      if (bcast) st.withColumn("stot",
-        sum("deg").over(Window.partitionBy("label")))
-      else st
-    // At init every label is its own node, so Σ_tot(label) = deg exactly
-    // — no window needed. Rounds continue at roundOffset + 1, so parity
+    // SortMergeJoins). Rounds continue at roundOffset + 1, so parity
     // classes and checkpoint indices stay distinct across levels.
     val init = nodes.join(deg, "node")
       .select(col("node"), col("node").as("label"), col("deg"))
-    val labels = Ckpt.iterate(
-        if (bcast) init.withColumn("stot", col("deg")) else init,
+    val labels = Ckpt.iterate(init,
         roundOffset + 1 to roundOffset + rounds, reliableEvery) { (lab, r) =>
       val active = (r % 2).toLong
       val isActive = pmod(col("node").cast("long"), lit(2L)) === active
-      val moved = louvainRound(sym, lab, active, mVal, scoreOut, labT, bcast)
+      val moved = louvainRound(sym, lab, active, mVal, scoreOut, bcast)
       // coalesce BEFORE the checkpoint: the union's partition count is
       // moved's (one exchange worth) PLUS the previous checkpoint's —
       // uncoalesced it grows by a full exchange width every round
@@ -1276,93 +1233,49 @@ object GraphOps {
       // node-sized label state, pure scheduling overhead). Narrow merge,
       // no shuffle; the node-sized state re-spreads at the next round's
       // exchange anyway.
-      // In the broadcast regime the NEW labeling's Σ_tot is attached
-      // here (withStot): the inactive rows' carried value is stale the
-      // moment any active node moves, so it is recomputed globally —
-      // one label-keyed window over the node-sized state per round.
-      withStot(moved.unionByName(
-          lab.filter(!isActive).select("node", "label", "deg")))
+      moved.unionByName(lab.filter(!isActive))
         .coalesce(canonW.sparkSession.sparkContext.defaultParallelism)
     }
     (labels.select("node", "label"), bcast)
   }
 
   /** One semi-synchronous Louvain round over the symmetric weighted edge
-    * view `sym` and the label state `lab` — exposed (pre-checkpoint) so
-    * GraphOpsSpec can pin BOTH plan shapes, the [[pageRankStep]]
-    * convention. Candidate set = neighbor communities ∪ {current}, built
-    * as ONE partial-aggregated sum: the stay row rides the union as a
-    * kic=0.0 term (x + 0.0 is exact for every IEEE double, and an empty
-    * neighbor sum lands on 0.0 exactly as a coalesce would).
-    *
-    *  - `bcast = true` (state carries its label's Σ_tot): exactly ONE
-    *    broadcast build per round — the plain state enters the edge join
-    *    broadcast, the neighbor row delivers the candidate community's
-    *    Σ_tot, the stay row its own, and the node's (label, deg) ride
-    *    the union as null-padded columns resolved by max-over-node
-    *    windows (each node has exactly ONE stay row, so the max IS that
-    *    value; same exchange as the argmax window). The former per-round
-    *    Σ_tot aggregate broadcast and act-join broadcast are gone. All
-    *    resolved values are exact (integral sums / verbatim copies), so
-    *    the scores are bit-identical to the three-join shape.
-    *  - `bcast = false` (web-scale): the aggregate + join shape — no
-    *    broadcast of unbounded frames, no window partitioned by label
-    *    (which could not partially aggregate one mega-community). */
+    * view `sym` and the label state `lab` (node, label, deg) — exposed
+    * (pre-checkpoint) so GraphOpsSpec can pin its plan, the
+    * [[pageRankStep]] convention. Candidate set = neighbor communities ∪
+    * {current}, built as ONE partial-aggregated sum: the stay row rides
+    * the union as a kic=0.0 term (x + 0.0 is exact for every IEEE double,
+    * and an empty neighbor sum lands on 0.0 exactly as a coalesce would).
+    * Σ_tot is one label-keyed aggregate (partially aggregated, so one
+    * mega-community never pins a single task), joined back with the
+    * active nodes' (label, deg). `bcast` only hints the three node-sized
+    * frames (the label state, the active nodes, Σ_tot) broadcast into
+    * their joins. */
   private[graft] def louvainRound(sym: DataFrame, lab: DataFrame,
       active: Long, mVal: Double, scoreOut: Column => Column,
-      labT: org.apache.spark.sql.types.DataType,
       bcast: Boolean): DataFrame = {
     val isActive = pmod(col("node").cast("long"), lit(2L)) === active
     val act = lab.filter(isActive)
-    val symAct = sym
+    val stot = lab.groupBy("label").agg(sum("deg").as("stot"))
+    val counted = sym
       .filter(pmod(col("u").cast("long"), lit(2L)) === active)
-    if (bcast) {
-      val counted = symAct
-        .join(broadcast(lab), col("v") === col("node"))
-        .select(col("u").as("node"), col("label").as("nl"),
-          col("w").as("kic"), col("stot"),
-          lit(null).cast(labT).as("lab0"),
-          lit(null).cast("double").as("deg0"))
-        .unionByName(act.select(col("node"), col("label").as("nl"),
-          lit(0.0).as("kic"), col("stot"),
-          col("label").as("lab0"), col("deg").as("deg0")))
-        .groupBy("node", "nl")
-        .agg(sum("kic").as("kic"), max("stot").as("stot"),
-          max("lab0").as("lab0"), max("deg0").as("deg0"))
-      val wNode = Window.partitionBy("node")
-      val stotAdj = col("stot") -
-        when(col("nl") === col("label"), col("deg")).otherwise(lit(0.0))
-      val scored = counted
-        .withColumn("label", max("lab0").over(wNode))
-        .withColumn("deg", max("deg0").over(wNode))
-        .withColumn("__s", scoreOut(
-          col("kic") - col("deg") * stotAdj / (lit(2.0) * lit(mVal))))
-      val pick = Window.partitionBy("node")
-        .orderBy(col("__s").desc, col("nl").asc)
-      scored.withColumn("__rk", row_number().over(pick))
-        .filter(col("__rk") === 1)
-        .select(col("node"), col("nl").as("label"), col("deg"))
-    } else {
-      val stot = lab.groupBy("label").agg(sum("deg").as("stot"))
-      val counted = symAct
-        .join(lab.select(col("node").as("v"), col("label").as("nl")), "v")
-        .select(col("u").as("node"), col("nl"), col("w").as("kic"))
-        .unionByName(act.select(col("node"), col("label").as("nl"),
-          lit(0.0).as("kic")))
-        .groupBy("node", "nl").agg(sum("kic").as("kic"))
-      val stotAdj = col("stot") -
-        when(col("nl") === col("label"), col("deg")).otherwise(lit(0.0))
-      val scored = counted
-        .join(act.select(col("node"), col("label"), col("deg")), "node")
-        .join(stot.select(col("label").as("nl"), col("stot")), "nl")
-        .withColumn("__s", scoreOut(
-          col("kic") - col("deg") * stotAdj / (lit(2.0) * lit(mVal))))
-      val pick = Window.partitionBy("node")
-        .orderBy(col("__s").desc, col("nl").asc)
-      scored.withColumn("__rk", row_number().over(pick))
-        .filter(col("__rk") === 1)
-        .select(col("node"), col("nl").as("label"), col("deg"))
-    }
+      .join(bc(bcast)(lab.select(col("node").as("v"), col("label").as("nl"))), "v")
+      .select(col("u").as("node"), col("nl"), col("w").as("kic"))
+      .unionByName(act.select(col("node"), col("label").as("nl"),
+        lit(0.0).as("kic")))
+      .groupBy("node", "nl").agg(sum("kic").as("kic"))
+    val stotAdj = col("stot") -
+      when(col("nl") === col("label"), col("deg")).otherwise(lit(0.0))
+    val scored = counted
+      .join(bc(bcast)(act.select(col("node"), col("label"), col("deg"))), "node")
+      .join(bc(bcast)(stot.select(col("label").as("nl"), col("stot"))), "nl")
+      .withColumn("__s", scoreOut(
+        col("kic") - col("deg") * stotAdj / (lit(2.0) * lit(mVal))))
+    val pick = Window.partitionBy("node")
+      .orderBy(col("__s").desc, col("nl").asc)
+    scored.withColumn("__rk", row_number().over(pick))
+      .filter(col("__rk") === 1)
+      .select(col("node"), col("nl").as("label"), col("deg"))
   }
 
   /** Per-community (n_nodes, n_int, stot) frame + 1-row modularity of a

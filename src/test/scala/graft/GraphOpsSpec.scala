@@ -107,6 +107,10 @@ class GraphOpsSpec extends SparkSpec {
       val fastPlan = planOf(bcast = true)
       assert(fastPlan.contains("BroadcastHashJoin"),
         s"fast path should take the hint:\n$fastPlan")
+      // the hint is the only difference: the hinted step sums the
+      // dangling mass with the same scalar aggregate, no window either
+      assert(!fastPlan.contains("Window"),
+        s"hinted step must not window the rank vector:\n$fastPlan")
     } finally saved.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
@@ -227,47 +231,46 @@ class GraphOpsSpec extends SparkSpec {
     assert(bLocal == bDur, s"$bLocal vs $bDur")
   }
 
-  test("louvain round: fused broadcast shape ≡ three-join scale shape, one build") {
+  test("louvain round: hinted and unhinted rounds agree; only the hint broadcasts") {
     // two triangles {1,2,3} and {4,5,6} with bridge 3-4; m = 7
     val canon = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
         (5L, 6L), (3L, 4L))
       .toDF("u", "v").withColumn("w", lit(1.0))
     val sym = canon.unionAll(canon.select(col("v").as("u"),
       col("u").as("v"), col("w")))
-    // state after round 1 of the real sweep doesn't matter — any valid
-    // (node, label, deg, stot) state exercises the round contract; stot
-    // is Σ deg over each label, per the sweep's checkpoint invariant
-    val lab = Seq((1L, 1L, 2.0), (2L, 1L, 2.0), (3L, 1L, 3.0),
+    // any valid (node, label, deg) state exercises the round contract;
+    // node 3 starts in the other triangle's community
+    val lab = Seq((1L, 1L, 2.0), (2L, 1L, 2.0), (3L, 4L, 3.0),
         (4L, 4L, 3.0), (5L, 4L, 2.0), (6L, 4L, 2.0))
       .toDF("node", "label", "deg")
-      .withColumn("stot", sum("deg").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("label")))
-    val labT = org.apache.spark.sql.types.LongType
     def run(bcast: Boolean) = GraphOps.louvainRound(sym, lab, active = 1L,
-        mVal = 7.0, scoreOut = dec6, labT = labT, bcast = bcast)
-    val fused = run(bcast = true).collect()
+        mVal = 7.0, scoreOut = dec6, bcast = bcast)
+    def rows(bcast: Boolean) = run(bcast).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
-    val joined = run(bcast = false).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
-    assert(fused.sameElements(joined),
-      s"fused ≠ three-join: ${fused.toSeq} vs ${joined.toSeq}")
+    val hinted = rows(bcast = true)
+    val unhinted = rows(bcast = false)
+    assert(hinted.sameElements(unhinted),
+      s"hinted ≠ unhinted: ${hinted.toSeq} vs ${unhinted.toSeq}")
+    // active node 3 moves back to community 1: gain 2 − 3·4/14 against
+    // 1 − 3·7/14 for staying in 4
+    assert(hinted.toSeq.contains((3L, 1L, 3.0)), hinted.toSeq)
     // plan pins (auto-broadcast off so only the explicit hint builds one):
-    // the fused shape pays exactly ONE broadcast build per round; the
-    // scale shape broadcasts nothing and never windows by label
+    // the hinted round broadcasts, the unhinted one broadcasts nothing,
+    // and neither windows by label (Σ_tot is a partially aggregated sum)
     val confs = Seq("spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
     val saved = confs.map(k => k -> spark.conf.getOption(k))
     confs.foreach(k => spark.conf.set(k, "-1"))
     try {
-      val fusedPlan = run(bcast = true).queryExecution.executedPlan.toString
-      val nBuilds = "BroadcastExchange".r.findAllIn(fusedPlan).length
-      assert(nBuilds == 1,
-        s"fused round must pay exactly one broadcast build, got $nBuilds:\n$fusedPlan")
+      val hintedPlan = run(bcast = true).queryExecution.executedPlan.toString
+      assert(hintedPlan.contains("BroadcastHashJoin"),
+        s"hinted round should take the hint:\n$hintedPlan")
       val scalePlan = run(bcast = false).queryExecution.executedPlan.toString
       assert(!scalePlan.contains("BroadcastHashJoin"),
-        s"scale round must not broadcast the label state:\n$scalePlan")
-      assert(!scalePlan.contains("windowspecdefinition(label"),
-        s"scale round must not window by label (no partial agg):\n$scalePlan")
+        s"unhinted round must not broadcast the label state:\n$scalePlan")
+      Seq(hintedPlan, scalePlan).foreach(p =>
+        assert(!p.contains("windowspecdefinition(label"),
+          s"a round must not window by label (no partial agg):\n$p"))
     } finally saved.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
